@@ -26,6 +26,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from mysql_streamer_spark.storage import atomic_write_json, read_json
+
 try:
     from pyspark.sql.datasource import (
         DataSource,
@@ -129,16 +131,8 @@ class ManifestSinkWriter(DataSourceArrowWriter):
         # then atomically repoints the HEAD manifest: readers pin a
         # version for time travel or follow HEAD for latest — the
         # Delta/Iceberg snapshot-log idea in one file pair
-        with open(
-            os.path.join(self.path, _versioned_name(version)), "w"
-        ) as fh:
-            json.dump(manifest, fh)
-        tmp = os.path.join(self.path, f".{MANIFEST_NAME}.{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        # rename is atomic on a POSIX filesystem; object stores use a
-        # conditional PUT of the same single manifest object
-        os.replace(tmp, os.path.join(self.path, MANIFEST_NAME))
+        atomic_write_json(os.path.join(self.path, _versioned_name(version)), manifest)
+        atomic_write_json(os.path.join(self.path, MANIFEST_NAME), manifest)
 
     def abort(self, messages) -> None:
         for m in messages or []:
@@ -178,20 +172,13 @@ class ManifestStreamWriter(DataSourceStreamArrowWriter):
     def _ledger_path(self) -> str:
         return os.path.join(self.path, "_BATCHES.json")
 
-    def _ledger(self) -> dict:
-        try:
-            with open(self._ledger_path()) as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            return {}
-
     def commit(self, messages, batchId: int) -> None:
         files = [
             {"file": m.filename, "n_rows": m.n_rows}
             for m in messages
             if m is not None and m.filename
         ]
-        ledger = self._ledger()
+        ledger = read_json(self._ledger_path()) or {}
         key = str(batchId)
         # replayed batch: reuse its version slot (the old snapshot's parts
         # become orphans — invisible to readers, reclaimed by vacuum)
@@ -202,19 +189,10 @@ class ManifestStreamWriter(DataSourceStreamArrowWriter):
             "files": files,
             "n_rows": sum(f["n_rows"] for f in files),
         }
-        with open(
-            os.path.join(self.path, _versioned_name(version)), "w"
-        ) as fh:
-            json.dump(manifest, fh)
+        atomic_write_json(os.path.join(self.path, _versioned_name(version)), manifest)
         ledger[key] = version
-        tmp = f"{self._ledger_path()}.{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(ledger, fh)
-        os.replace(tmp, self._ledger_path())
-        tmp = os.path.join(self.path, f".{MANIFEST_NAME}.{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        os.replace(tmp, os.path.join(self.path, MANIFEST_NAME))
+        atomic_write_json(self._ledger_path(), ledger)
+        atomic_write_json(os.path.join(self.path, MANIFEST_NAME), manifest)
 
     def abort(self, messages, batchId: int) -> None:
         self._delegate.abort(messages)

@@ -578,20 +578,18 @@ class ManifestJsonlWriter(DataSourceWriter):
         return _ShardCommit(shard, n)
 
     def commit(self, messages) -> None:
-        import json as _json
         import os
+
+        from mysql_streamer_spark.storage import atomic_write_json, read_json
 
         manifest_path = os.path.join(self.path, "_MANIFEST.json")
         prior: list[dict] = []
-        if not self.overwrite and os.path.exists(manifest_path):
+        if not self.overwrite:
             # Append MERGES into the prior generation — without this a
             # second append would orphan every previously committed shard
-            # (files present but absent from the manifest).
-            try:
-                with open(manifest_path, encoding="utf-8") as fh:
-                    prior = _json.load(fh).get("shards", [])
-            except (OSError, ValueError):
-                prior = []
+            # (files present but absent from the manifest). An unreadable
+            # manifest raises instead of silently orphaning them.
+            prior = (read_json(manifest_path) or {}).get("shards", [])
         new = []
         for m in messages:
             final = os.path.join(self.path, os.path.basename(m.staged))
@@ -603,13 +601,10 @@ class ManifestJsonlWriter(DataSourceWriter):
             "total_rows": sum(s["rows"] for s in shards),
             "committed": True,
         }
-        # Atomic manifest swap: tmp write + rename, so a reader never sees
-        # a torn manifest and a crash before the rename leaves the prior
+        # Atomic manifest swap: tmp write + fsync + rename, so a reader never
+        # sees a torn manifest and a crash before the rename leaves the prior
         # manifest (and its shards, still undeleted below) fully intact.
-        tmp = manifest_path + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            _json.dump(manifest, fh, sort_keys=True)
-        os.replace(tmp, manifest_path)
+        atomic_write_json(manifest_path, manifest)
         if self.overwrite:
             # Old generation is deleted only AFTER the new manifest is in
             # force; orphans from a crash here are invisible to manifest

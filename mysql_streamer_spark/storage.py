@@ -1,4 +1,5 @@
-"""Bucketed-table storage: pre-shuffled layouts for co-located joins.
+"""Storage layouts: bucketed tables, compaction plans, and the package's one
+durable file-commit protocol.
 
 Repeated large-fact joins on the same key should not pay the shuffle every
 query. Writing both sides bucketed by the join key (same bucket count)
@@ -9,7 +10,42 @@ reference's per-table Kafka topic partitioning.
 
 from __future__ import annotations
 
+import json
+import os
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
+
+
+def atomic_write_json(path: str, obj) -> None:
+    """Durably replace ``path`` with ``obj`` as JSON: a uniquely named
+    hidden temp file in the same directory, flushed and fsynced, then
+    ``os.replace``d over the target, so readers see the old document or the
+    new one, never a torn or (after a power loss) empty one (object stores
+    would use a conditional PUT). The package's one commit protocol for
+    driver-side state and manifests."""
+    head, name = os.path.split(path)
+    tmp = os.path.join(head, f".{name}.{uuid.uuid4().hex}.tmp")
+    try:
+        with open(tmp, "x", encoding="utf-8") as fh:
+            json.dump(obj, fh, sort_keys=True)
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):  # the write or the rename failed
+            os.remove(tmp)
+
+
+def read_json(path: str):
+    """The JSON document at ``path``, or None if it was never written. Any
+    other failure (unreadable, truncated) raises: state read as "never
+    saved" would silently reset whatever it records."""
+    try:
+        with open(path, encoding="utf-8") as fh:
+            return json.load(fh)
+    except FileNotFoundError:
+        return None
 
 
 def write_bucketed(

@@ -35,7 +35,6 @@ else changes.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -47,6 +46,8 @@ from mysql_streamer_spark.cdc.source import (
     events_as_cdc,
 )
 from mysql_streamer_spark.schema.bootstrap import versioned_dim_rows
+from mysql_streamer_spark.storage import atomic_write_json, read_json
+from mysql_streamer_spark.streaming.singleton import NamespaceLock
 from mysql_streamer_spark.tables import load_table
 
 #: feed schema shared by QueryEvents and DataEvents (version/schema_id are
@@ -222,15 +223,12 @@ class DdlBarrierHandler:
         if not files:
             return set(initial_state_entries())
         _, latest = files[-1]
-        with open(os.path.join(self.state_dir, latest), encoding="utf-8") as fh:
-            return {tuple(e) for e in json.load(fh)}
+        return {tuple(e) for e in read_json(os.path.join(self.state_dir, latest))}
 
     def _save_state(self, batch_id: int) -> None:
-        path = os.path.join(self.state_dir, f"after-{batch_id}.json")
-        tmp = path + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(sorted(self.state), fh)
-        os.replace(tmp, path)
+        atomic_write_json(
+            os.path.join(self.state_dir, f"after-{batch_id}.json"), sorted(self.state)
+        )
 
     # -- the barrier -------------------------------------------------------
     def _dim_rows(self) -> list[tuple[str, str, int, int, str, str | None]]:
@@ -310,20 +308,23 @@ def run_ddl_barrier_stream(
     """Drain the staged feed through the DDL barrier; returns the number of
     micro-batches executed. Restart with the same dirs to recover from an
     injected crash (deterministic replay x idempotent sink x idempotent
-    state application)."""
-    handler = DdlBarrierHandler(out_dir, state_dir, fail_after_batches, fail_mode)
-    stream = (
-        spark.readStream.schema(FEED_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(handler)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    state application). Runs under the checkpoint's namespace lock, like
+    run_envelope_stream: a second driver on the same dirs raises
+    SingletonLockHeld instead of interleaving schema-event checkpoints."""
+    with NamespaceLock(checkpoint_dir):
+        handler = DdlBarrierHandler(out_dir, state_dir, fail_after_batches, fail_mode)
+        stream = (
+            spark.readStream.schema(FEED_SCHEMA)
+            .option("maxFilesPerTrigger", max_files_per_trigger)
+            .parquet(src_dir)
+        )
+        q = (
+            stream.writeStream.foreachBatch(handler)
+            .option("checkpointLocation", checkpoint_dir)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
     return handler.done

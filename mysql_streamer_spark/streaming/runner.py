@@ -4,9 +4,9 @@ Re-expresses the reference's entire state/recovery subsystem with Spark
 Structured Streaming primitives:
 
 - T4 position checkpoint: the checkpoint directory. Spark records source
-  offsets per micro-batch transactionally; there is no hand-rolled
-  ``global_event_state`` table to keep in sync
-  (reference util/misc.py:89-114, base_parse_replication_stream.py:207-221).
+  offsets per micro-batch transactionally; recovery reads no hand-rolled
+  ``global_event_state`` table (reference util/misc.py:89-114,
+  base_parse_replication_stream.py:207-221).
 - R2/R3 restart + unclean-shutdown recovery: restarting the query with the
   same checkpoint deterministically REPLAYS the failed micro-batch
   (reference replication_stream_restarter.py:31-100,
@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mysql_streamer_spark.cdc.pipeline import envelope_pipeline_df
+from mysql_streamer_spark.streaming import state_table
 
 
 #: Production state backend: RocksDB keeps stateful-operator state (dedup
@@ -133,9 +134,11 @@ def run_envelope_stream(
     ``fail_after_batches=N`` injects a crash after N successful batches
     (mirrors the reference's RestartHelper stop-after-N hook,
     testing_helper/restart_helper.py:39-124) — the caller restarts with the
-    same checkpoint to exercise recovery. ``state_dir`` additionally
-    maintains the reference-parity global_event_state row per batch
-    (streaming/state_table.py).
+    same checkpoint to exercise recovery. ``state_dir`` additionally keeps
+    the reference-parity state after each sink write, derived from the batch
+    read back from the sink: ``<cluster_name>.json`` (global_event_state)
+    and ``topic_offsets.json`` (data_event_checkpoint), driver-side JSON
+    committed by temp file + fsync + rename (streaming/state_table.py).
     """
     sink = _idempotent_parquet_sink(out_dir)
     done = [0]
@@ -146,17 +149,12 @@ def run_envelope_stream(
         env = envelope_pipeline_df(batch_df)
         sink(env, batch_id)
         if state_dir is not None:
-            from mysql_streamer_spark.streaming.state_table import (
-                advance_state,
-                batch_position,
-                save_topic_offsets,
-            )
-
+            # module attributes, looked up per batch (callers may swap them)
             committed = read_sink_batch(spark, out_dir, batch_id)
-            pos = batch_position(committed)
+            pos = state_table.batch_position(committed)
             if pos is not None:
-                advance_state(spark, state_dir, cluster_name, pos, batch_id)
-                save_topic_offsets(committed, state_dir, batch_id)
+                state_table.advance_state(spark, state_dir, cluster_name, pos, batch_id)
+                state_table.save_topic_offsets(committed, state_dir, batch_id)
         done[0] += 1
 
     events = load_events_stream(spark, source_dir, max_files_per_trigger)

@@ -1,26 +1,31 @@
 """State-table parity (T4/K3): the reference persists its resume position
 as one row per cluster in ``global_event_state`` (models/
-global_event_state.py:37-92, upserted from the producer's position
-callback). Spark's checkpoint already owns recovery; this table exists for
-operational parity — an inspectable "where is the pipeline" row — and is
-maintained transactionally-enough by overwriting one tiny parquet dir per
-cluster after each committed micro-batch.
+global_event_state.py:37-92) and per-topic offsets in
+``data_event_checkpoint`` (models/data_event_checkpoint.py:38-143). Spark's
+checkpoint already owns recovery; this state is an inspectable "where is
+the pipeline" view kept as two driver-side JSON documents in ``state_dir``:
+``<cluster>.json`` (the position row) and ``topic_offsets.json`` (per-topic
+high-water marks). Each save is one ``storage.atomic_write_json`` commit
+(temp file + fsync + rename), so saving and loading run no Spark job; the
+only Spark work is the aggregates over the batch just read back.
 """
 
 from __future__ import annotations
 
-import json
+import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mysql_streamer_spark.cdc.positions import LogPosition
+from mysql_streamer_spark.cdc.positions import LogPosition, construct_position
+from mysql_streamer_spark.storage import atomic_write_json, read_json
 
-STATE_SCHEMA = (
-    "cluster_name string, position string, batch_id long, "
-    "event_type string, is_clean_shutdown boolean, time_updated double"
-)
+TOPIC_OFFSETS = "topic_offsets.json"
+
+
+def _order(p: LogPosition) -> tuple:
+    return (p.log_file, p.log_pos, p.offset or 0)
 
 
 def batch_position(env_batch: DataFrame) -> LogPosition | None:
@@ -44,18 +49,19 @@ def save_state(
     batch_id: int,
     is_clean_shutdown: bool = False,
 ) -> None:
-    """Upsert-by-overwrite of the cluster's single state row."""
-    row = (
-        cluster_name,
-        position.to_json(),
-        batch_id,
-        "data_event",
-        is_clean_shutdown,
-        time.time(),
+    """Upsert-by-replace of the cluster's single state row."""
+    os.makedirs(state_dir, exist_ok=True)
+    atomic_write_json(
+        os.path.join(state_dir, f"{cluster_name}.json"),
+        {
+            "cluster_name": cluster_name,
+            "position": position.to_dict(),
+            "batch_id": batch_id,
+            "event_type": "data_event",
+            "is_clean_shutdown": is_clean_shutdown,
+            "time_updated": time.time(),
+        },
     )
-    spark.createDataFrame([row], STATE_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{state_dir}/{cluster_name}")
 
 
 def advance_state(
@@ -69,30 +75,18 @@ def advance_state(
     the saved position is a high-water mark, and micro-batches are not
     guaranteed to arrive in event order when backfilling many files)."""
     existing = load_state(spark, state_dir, cluster_name)
-    if existing is not None:
-        old, _, _ = existing
-        if (old.log_file, old.log_pos, old.offset or 0) >= (
-            position.log_file,
-            position.log_pos,
-            position.offset or 0,
-        ):
-            position = old
+    if existing is not None and _order(existing[0]) >= _order(position):
+        position = existing[0]
     save_state(spark, state_dir, cluster_name, position, batch_id)
 
 
 def load_state(spark: SparkSession, state_dir: str, cluster_name: str):
     """(LogPosition, batch_id, is_clean_shutdown) or None if never saved."""
-    from mysql_streamer_spark.cdc.positions import construct_position
-
-    try:
-        row = spark.read.parquet(f"{state_dir}/{cluster_name}").collect()[0]
-    except Exception:
+    row = read_json(os.path.join(state_dir, f"{cluster_name}.json"))
+    if row is None:
         return None
-    return (
-        construct_position(json.loads(row.position)),
-        row.batch_id,
-        row.is_clean_shutdown,
-    )
+    pos = construct_position(row["position"])
+    return pos, row["batch_id"], row["is_clean_shutdown"]
 
 
 # -- per-topic offsets (reference data_event_checkpoint,
@@ -102,41 +96,34 @@ _TOPIC_SCHEMA = "topic string, max_txn_order long, n_messages long, batch_id lon
 
 
 def save_topic_offsets(env_batch: DataFrame, state_dir: str, batch_id: int) -> None:
-    """Upsert-by-overwrite of the per-topic high-water offsets from one
-    committed batch, merged monotonically with the existing table (bulk
-    upsert semantics of the reference's checkpoint table)."""
-    from pyspark.sql import functions as F
-
-    spark = env_batch.sparkSession
-    new = (
-        env_batch.withColumn(
-            "topic", F.concat_ws(".", "database_name", "table_name")
-        )
-        .groupBy("topic")
-        .agg(
-            F.max("txn_order").alias("max_txn_order"),
-            F.count("*").alias("n_messages"),
-        )
-        .withColumn("batch_id", F.lit(batch_id))
+    """Merge one committed batch's per-topic high-water offsets and counts
+    into the saved ones (bulk upsert semantics of the reference's
+    checkpoint table). Idempotent per batch id: a topic already saved at
+    this batch id or later skips it, so a batch replayed after a crash
+    between this save and the engine's commit is not counted twice."""
+    path = os.path.join(state_dir, TOPIC_OFFSETS)
+    offsets = read_json(path) or {}
+    topic = F.concat_ws(".", "database_name", "table_name").alias("topic")
+    new = env_batch.groupBy(topic).agg(
+        F.max("txn_order").alias("max_txn_order"), F.count("*").alias("n_messages")
     )
-    path = f"{state_dir}/topic_offsets"
-    try:
-        old = spark.read.parquet(path)
-        merged = (
-            old.unionByName(new)
-            .groupBy("topic")
-            .agg(
-                F.max("max_txn_order").alias("max_txn_order"),
-                F.sum("n_messages").alias("n_messages"),
-                F.max("batch_id").alias("batch_id"),
-            )
-        ).collect()
-    except Exception:
-        merged = new.collect()
-    spark.createDataFrame(merged, _TOPIC_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(path)
+    for r in new.collect():
+        unseen = {"max_txn_order": r.max_txn_order, "n_messages": 0, "batch_id": -1}
+        old = offsets.get(r.topic, unseen)
+        if old["batch_id"] < batch_id:
+            offsets[r.topic] = {
+                "max_txn_order": max(old["max_txn_order"], r.max_txn_order),
+                "n_messages": old["n_messages"] + r.n_messages,
+                "batch_id": batch_id,
+            }
+    os.makedirs(state_dir, exist_ok=True)
+    atomic_write_json(path, offsets)
 
 
 def load_topic_offsets(spark: SparkSession, state_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{state_dir}/topic_offsets")
+    """The saved per-topic offsets (empty if none were saved yet)."""
+    offsets = read_json(os.path.join(state_dir, TOPIC_OFFSETS)) or {}
+    rows = [
+        (t, o["max_txn_order"], o["n_messages"], o["batch_id"]) for t, o in offsets.items()
+    ]
+    return spark.createDataFrame(rows, _TOPIC_SCHEMA)

@@ -201,3 +201,25 @@ def test_envelope_stream_runs_under_the_lock(spark, sf_dir, tmp_path):
     n = run_envelope_stream(spark, src, str(tmp_path / "out"), ckpt)
     assert n >= 1
     assert not os.path.exists(os.path.join(ckpt, LOCK_FILENAME))
+
+
+def test_ddl_barrier_stream_runs_under_the_lock(spark, sf_dir, tmp_path):
+    """A live foreign holder on the checkpoint namespace stops
+    run_ddl_barrier_stream before it reads or writes any state."""
+    from mysql_streamer_spark.streaming.ddl_barrier import (
+        run_ddl_barrier_stream,
+        stage_barrier_feed,
+    )
+
+    src, out, ckpt, state = (
+        str(tmp_path / d) for d in ("src", "out", "ckpt", "state")
+    )
+    stage_barrier_feed(spark, sf_dir, src)
+    holder = _holder_proc(ckpt)
+    try:
+        with pytest.raises(SingletonLockHeld):
+            run_ddl_barrier_stream(spark, src, out, ckpt, state)
+        assert not os.path.exists(out) and not os.path.exists(state)
+    finally:
+        holder.kill()
+        holder.wait()

@@ -159,6 +159,84 @@ def test_topic_offsets_checkpoint(spark, multi_file_events, tmp_path):
     assert saved == expected
 
 
+def _raise_once(original, after_original: bool):
+    """A stand-in that raises on its first call (after running the original
+    when ``after_original``) and delegates on every later call."""
+    calls = []
+
+    def stand_in(*args, **kwargs):
+        if calls:
+            return original(*args, **kwargs)
+        calls.append(1)
+        if after_original:
+            original(*args, **kwargs)
+        raise RuntimeError("injected crash in the state commit")
+
+    return stand_in
+
+
+@pytest.mark.parametrize("crash_in", ["advance_state", "save_topic_offsets"])
+def test_crash_after_sink_write_replays_into_consistent_state(
+    spark, multi_file_events, tmp_path, monkeypatch, crash_in
+):
+    """The crash window between a batch's sink write and the engine's commit:
+    before the state advance (the tail benchmark's crash), or right after
+    the topic offsets were saved. The runner looks ``state_table`` functions up
+    per batch, so the patched module attribute is what crashes. The restart
+    replays batch 0 over its own sink directory, and the state then
+    describes the sink exactly: no lost and no double-counted batch."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from mysql_streamer_spark.streaming import state_table
+
+    src, _ = multi_file_events
+    out, ckpt, state = (str(tmp_path / d) for d in ("out", "ckpt", "state"))
+    monkeypatch.setattr(
+        state_table,
+        crash_in,
+        _raise_once(
+            getattr(state_table, crash_in), after_original=crash_in == "save_topic_offsets"
+        ),
+    )
+
+    def parts(batch_id):
+        return {f for f in os.listdir(f"{out}/batch_id={batch_id}") if f.startswith("part-")}
+
+    with pytest.raises(Exception, match="injected crash in the state commit"):
+        run_envelope_stream(
+            spark, src, out, ckpt, max_files_per_trigger=2, state_dir=state
+        )
+    first_attempt = parts(0)
+    run_envelope_stream(spark, src, out, ckpt, max_files_per_trigger=2, state_dir=state)
+    assert parts(0).isdisjoint(first_attempt), "batch 0 was not rewritten"
+
+    got = read_sink(spark, out)
+    expected = _expected(spark, src)
+    assert got.count() == expected.count()
+    assert got.select("cluster_name", "txn_order").distinct().count() == got.count()
+
+    hi = got.orderBy(got.txn_order.desc()).limit(1).collect()[0]
+    pos, batch_id, _ = state_table.load_state(spark, state, "refresh_primary")
+    assert (pos.log_file, pos.log_pos, pos.offset) == (hi.log_file, hi.log_pos, hi.offset)
+    assert batch_id == 1
+
+    saved = {
+        r.topic: (r.max_txn_order, r.n_messages)
+        for r in state_table.load_topic_offsets(spark, state).collect()
+    }
+    in_sink = {
+        r.topic: (r.mx, r.n)
+        for r in got.groupBy(
+            F.concat_ws(".", "database_name", "table_name").alias("topic")
+        )
+        .agg(F.max("txn_order").alias("mx"), F.count("*").alias("n"))
+        .collect()
+    }
+    assert saved == in_sink
+
+
 def test_upsert_state_crash_restart_equals_batch_latest(
     spark, multi_file_events, tmp_path
 ):
