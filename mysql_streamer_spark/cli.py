@@ -74,25 +74,15 @@ def cmd_snapshot(args: argparse.Namespace) -> int:
 
 
 def cmd_changelog(args: argparse.Namespace) -> int:
-    from mysql_streamer_spark.streaming.runner import load_events_stream
+    from mysql_streamer_spark.streaming.runner import run_changelog_stream
 
-    spark = _spark()
-    events = load_events_stream(spark, args.source_dir, args.max_files_per_trigger)
-
-    def process(batch_df, batch_id):
-        from mysql_streamer_spark.cdc.pipeline import changelog_from_cdc
-        from mysql_streamer_spark.cdc.source import events_as_cdc
-
-        rows = changelog_from_cdc(events_as_cdc(batch_df))
-        rows.write.mode("overwrite").parquet(f"{args.out_dir}/batch_id={batch_id}")
-
-    q = (
-        events.writeStream.foreachBatch(process)
-        .option("checkpointLocation", args.checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    run_changelog_stream(
+        _spark(),
+        args.source_dir,
+        args.out_dir,
+        args.checkpoint_dir,
+        max_files_per_trigger=args.max_files_per_trigger,
     )
-    q.awaitTermination()
     print(json.dumps({"out": args.out_dir}))
     return 0
 

@@ -98,7 +98,11 @@ class ManifestSinkWriter(DataSourceArrowWriter):
             tbl = pa.Table.from_batches(batches)
         else:
             return _PartCommit("", 0)  # empty partition: nothing to publish
-        pq.write_table(tbl, os.path.join(self.path, fname))
+        with open(os.path.join(self.path, fname), "wb") as fh:
+            pq.write_table(tbl, fh)
+            # durable before the manifest that commit() writes names it
+            fh.flush()
+            os.fsync(fh.fileno())
         return _PartCommit(fname, tbl.num_rows)
 
     def commit(self, messages) -> None:

@@ -251,49 +251,12 @@ class BinlogEventsStreamReader(SimpleDataSourceStreamReader):
         return {"row": 0}
 
     def _rows(self, start_row: int, end_row: int):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
         tbl = self._load().slice(start_row, end_row - start_row)
-        ts = tbl.column("ts")
-        # mirror the batch reader's type handling exactly: TIMESTAMP(NANOS)
-        # generations may surface as either timestamp[ns] OR plain int64
-        # nanos, and both must truncate ns -> µs; unknown shapes raise
-        # instead of silently passing through 1000x-off values
-        if pa.types.is_timestamp(ts.type):
-            unit = ts.type.unit
-        elif pa.types.is_int64(ts.type):
-            unit = "ns"
-        else:  # pragma: no cover - unknown future generation
-            raise TypeError(f"unsupported ts type {ts.type}")
-        ts_i64 = ts.cast(pa.int64(), safe=False)
-        if unit == "ns":
-            ts_i64 = pc.divide(ts_i64, pa.scalar(1000, pa.int64()))
-        elif unit != "us":  # pragma: no cover
-            raise TypeError(f"unsupported ts unit {unit}")
         # a LIST, not a generator: Spark's prefetch cache copy.copy()s the
         # iterator, which generators do not support. Columnar to_pydict +
         # zip beats per-scalar .as_py() indexing ~10x on wide batches.
-        cols = pa.table(
-            {
-                "event_id": tbl.column("event_id"),
-                "ts_us": ts_i64,
-                "user_id": tbl.column("user_id"),
-                "event_type": tbl.column("event_type"),
-                "value": tbl.column("value").cast(pa.float64()),
-                "props": tbl.column("props"),
-            }
-        ).to_pydict()
-        return list(
-            zip(
-                cols["event_id"],
-                cols["ts_us"],
-                cols["user_id"],
-                cols["event_type"],
-                cols["value"],
-                cols["props"],
-            )
-        )
+        # Columns come in BINLOG_SOURCE_SCHEMA order.
+        return list(zip(*_normalize_events(tbl).to_pydict().values()))
 
     def read(self, start: dict):
         total = self._load().num_rows
@@ -575,6 +538,9 @@ class ManifestJsonlWriter(DataSourceWriter):
                 )
                 fh.write("\n")
                 n += 1
+            # durable before the manifest that commit() writes names it
+            fh.flush()
+            os.fsync(fh.fileno())
         return _ShardCommit(shard, n)
 
     def commit(self, messages) -> None:

@@ -56,7 +56,8 @@ def envelope_to_kafka_records(env: DataFrame) -> DataFrame:
 
 def write_kafka(env: DataFrame, bootstrap_servers: str, checkpoint_dir: str):
     """Streaming Kafka sink over the record shape above (at-least-once from
-    Spark + idempotent key = effectively-once for compacted consumers)."""
+    Spark + idempotent key = effectively-once for compacted consumers).
+    Off runner.drain: it returns a live, continuous query."""
     return (
         envelope_to_kafka_records(env)
         .writeStream.format("kafka")

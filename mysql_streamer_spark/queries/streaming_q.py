@@ -21,7 +21,11 @@ from mysql_streamer_spark.queries.cdc import (
 )
 from mysql_streamer_spark.queries.registry import QuerySpec
 from mysql_streamer_spark.streaming import read_sink, run_envelope_stream
-from mysql_streamer_spark.streaming.runner import run_windowed_stream
+from mysql_streamer_spark.streaming.runner import (
+    drain,
+    run_windowed_stream,
+    write_sink_batch,
+)
 from mysql_streamer_spark.tables import table_path
 
 
@@ -97,11 +101,10 @@ def q_streaming_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{out}/batch_id={batch_id}")
-
+    # off runner.drain: under availableNow the simple reader serves only
+    # its first batch_rows batch
     q = (
-        env.writeStream.foreachBatch(write_batch)
+        env.writeStream.foreachBatch(lambda df, i: write_sink_batch(df, out, i))
         .option("checkpointLocation", ckpt)
         .start()
     )
@@ -136,19 +139,10 @@ def q_streaming_partitioned_source(spark: SparkSession, sf_dir: str) -> DataFram
     env = envelope_pipeline_df(
         stream_events_from_python_source(spark, sf_dir, partitioned=True)
     )
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{out}/batch_id={batch_id}")
-
-    q = (
-        env.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", ckpt)
-        .start()
+    drain(
+        env.writeStream.foreachBatch(lambda df, i: write_sink_batch(df, out, i)),
+        ckpt,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return read_sink(spark, out)
 
 
@@ -316,26 +310,11 @@ def q_streaming_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     {table_schema, table_name, id} changelog shape and appends under its
     batch id. The oracle is the batch changelog SQL — streaming and batch
     planes must agree row-for-row."""
-    from mysql_streamer_spark.cdc.source import events_as_cdc
-    from mysql_streamer_spark.streaming.runner import load_events_stream
+    from mysql_streamer_spark.streaming.runner import run_changelog_stream
 
     work = _staged_source(sf_dir)
-    events = load_events_stream(spark, f"{work}/src", max_files_per_trigger=1)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        from mysql_streamer_spark.cdc.pipeline import changelog_from_cdc
-
-        rows = changelog_from_cdc(events_as_cdc(batch_df))
-        rows.write.mode("overwrite").parquet(f"{work}/out/batch_id={batch_id}")
-
-    q = (
-        events.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{work}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(f"{work}/out").drop("batch_id")
+    run_changelog_stream(spark, f"{work}/src", f"{work}/out", f"{work}/ckpt")
+    return read_sink(spark, f"{work}/out")
 
 
 def _streaming_changelog_oracle() -> str:
@@ -379,20 +358,10 @@ def q_streaming_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         partials = incremental_daily_deltas(envelope_pipeline_df(batch_df))
-        partials.write.mode("overwrite").parquet(
-            f"{work}/deltas/batch_id={batch_id}"
-        )
+        write_sink_batch(partials, f"{work}/deltas", batch_id)
 
-    q = (
-        events.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{work}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return fold_incremental_mv(
-        spark.read.parquet(f"{work}/deltas").drop("batch_id")
-    )
+    drain(events.writeStream.foreachBatch(process), f"{work}/ckpt")
+    return fold_incremental_mv(read_sink(spark, f"{work}/deltas"))
 
 
 def _streaming_incremental_agg_oracle() -> str:
@@ -511,19 +480,10 @@ def q_streaming_secure_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_events_from_python_source(spark, sf_dir, partitioned=True)
     )
     wire = seal_to_avro(env, cfg)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{out}/batch_id={batch_id}")
-
-    q = (
-        wire.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", ckpt)
-        .start()
+    drain(
+        wire.writeStream.foreachBatch(lambda df, i: write_sink_batch(df, out, i)),
+        ckpt,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
     landed = avro_open_secure_envelope(read_sink(spark, out), cfg).withColumn(
         "cipher_ok",
@@ -587,20 +547,10 @@ def q_streaming_confluent_publish(spark: SparkSession, sf_dir: str) -> DataFrame
         stream_events_from_python_source(spark, sf_dir, partitioned=True)
     )
     wire = payload_to_confluent(env)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{out}/batch_id={batch_id}")
-
-    q = (
-        wire.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", ckpt)
-        .start()
+    drain(
+        wire.writeStream.foreachBatch(lambda df, i: write_sink_batch(df, out, i)),
+        ckpt,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
     return confluent_payload_decode(read_sink(spark, out))
 
 
@@ -799,13 +749,12 @@ def q_streaming_txn_atomic_batches(spark: SparkSession, sf_dir: str) -> DataFram
     work = _tf.mkdtemp(prefix="mss_txn_atomic_")
     out, ckpt = f"{work}/out", f"{work}/ckpt"
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.select("event_id").write.mode("overwrite").parquet(
-            f"{out}/batch_id={batch_id}"
-        )
-
+    # off runner.drain: under availableNow the simple reader serves only
+    # its first batch_rows batch
     q = (
-        events.writeStream.foreachBatch(write_batch)
+        events.writeStream.foreachBatch(
+            lambda df, i: write_sink_batch(df.select("event_id"), out, i)
+        )
         .option("checkpointLocation", ckpt)
         .start()
     )
@@ -989,18 +938,12 @@ def q_streaming_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sha2("payload", 256).alias("payload_sha"),
     )
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{out}/batch_id={batch_id}")
-
-    q = (
-        projected.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", ckpt)
-        .start()
+    drain(
+        projected.writeStream.foreachBatch(
+            lambda df, i: write_sink_batch(df, out, i)
+        ),
+        ckpt,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return read_sink(spark, out)
 
 

@@ -47,7 +47,7 @@ from mysql_streamer_spark.cdc.source import (
 )
 from mysql_streamer_spark.schema.bootstrap import versioned_dim_rows
 from mysql_streamer_spark.storage import atomic_write_json, read_json
-from mysql_streamer_spark.streaming.singleton import NamespaceLock
+from mysql_streamer_spark.streaming.runner import drain, write_sink_batch
 from mysql_streamer_spark.tables import load_table
 
 #: feed schema shared by QueryEvents and DataEvents (version/schema_id are
@@ -207,8 +207,9 @@ class DdlBarrierHandler:
         #: (schema_event_handler.py:183-203)
         self.fail_mode = fail_mode
         self.done = 0
-        os.makedirs(state_dir, exist_ok=True)
-        self.state = self._load_state()
+        #: loaded on the first batch, so nothing touches state_dir before
+        #: the drain holds the namespace lock
+        self.state: set[tuple[str, str, int, int, str]] | None = None
 
     # -- schema-event checkpoint ------------------------------------------
     def _state_files(self) -> list[tuple[int, str]]:
@@ -219,6 +220,7 @@ class DdlBarrierHandler:
         return sorted(out)
 
     def _load_state(self) -> set[tuple[str, str, int, int, str]]:
+        os.makedirs(self.state_dir, exist_ok=True)
         files = self._state_files()
         if not files:
             return set(initial_state_entries())
@@ -256,6 +258,8 @@ class DdlBarrierHandler:
         ):
             raise RuntimeError(f"injected crash before batch {batch_id}")
         spark = batch_df.sparkSession
+        if self.state is None:
+            self.state = self._load_state()
         # control plane: the batch's QueryEvents, applied in position order.
         # Idempotent set-union keyed by (db, table, version) — a replayed
         # batch re-applies harmlessly.
@@ -288,10 +292,7 @@ class DdlBarrierHandler:
             )
 
         dim = dim_from_interval_rows(spark, self._dim_rows())
-        routed = route_data_events(batch_df, dim)
-        routed.write.mode("overwrite").parquet(
-            f"{self.out_dir}/batch_id={batch_id}"
-        )
+        write_sink_batch(route_data_events(batch_df, dim), self.out_dir, batch_id)
         self.done += 1
 
 
@@ -308,23 +309,13 @@ def run_ddl_barrier_stream(
     """Drain the staged feed through the DDL barrier; returns the number of
     micro-batches executed. Restart with the same dirs to recover from an
     injected crash (deterministic replay x idempotent sink x idempotent
-    state application). Runs under the checkpoint's namespace lock, like
-    run_envelope_stream: a second driver on the same dirs raises
+    state application). A second driver on the same dirs raises
     SingletonLockHeld instead of interleaving schema-event checkpoints."""
-    with NamespaceLock(checkpoint_dir):
-        handler = DdlBarrierHandler(out_dir, state_dir, fail_after_batches, fail_mode)
-        stream = (
-            spark.readStream.schema(FEED_SCHEMA)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(src_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(handler)
-            .option("checkpointLocation", checkpoint_dir)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    handler = DdlBarrierHandler(out_dir, state_dir, fail_after_batches, fail_mode)
+    stream = (
+        spark.readStream.schema(FEED_SCHEMA)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(src_dir)
+    )
+    drain(stream.writeStream.foreachBatch(handler), checkpoint_dir)
     return handler.done

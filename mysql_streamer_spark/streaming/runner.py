@@ -16,9 +16,18 @@ Structured Streaming primitives:
   top of its partial first attempt instead of duplicating it (the
   ``ensure_messages_published`` dedup, recovery_handler.py:160-168, as a
   sink property rather than a recovery pass).
+- T7 singleton: every drain holds the checkpoint's namespace lock
+  (streaming/singleton.py), the reference's ZKLock
+  (base_parse_replication_stream.py:126-131) on the checkpoint's own
+  storage, so a second driver on the same checkpoint refuses to start.
 - T8 graceful shutdown: ``availableNow`` triggers drain all available input
   and terminate cleanly; an interrupted run is indistinguishable from a
   crash and heals by the same replay path.
+
+``drain`` is that lifecycle (lock, checkpoint, trigger, terminate) and
+``write_sink_batch`` that sink; every checkpointed stream in the package
+goes through them, and the few streams that cannot use ``drain`` say why
+where they start.
 
 Scale: the micro-batch plan is envelope_pipeline_df — stateless projections
 plus one broadcast join — so each batch parallelizes across the cluster
@@ -28,13 +37,14 @@ metadata.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
-from mysql_streamer_spark.cdc.pipeline import envelope_pipeline_df
+from mysql_streamer_spark.cdc.pipeline import changelog_from_cdc, envelope_pipeline_df
+from mysql_streamer_spark.cdc.source import events_as_cdc
 from mysql_streamer_spark.streaming import state_table
+from mysql_streamer_spark.streaming.singleton import NamespaceLock
 
 
 #: Production state backend: RocksDB keeps stateful-operator state (dedup
@@ -107,15 +117,27 @@ def load_events_stream(
     return stream
 
 
-def _idempotent_parquet_sink(out_dir: str) -> Callable[[DataFrame, int], None]:
+def drain(writer: DataStreamWriter, checkpoint_dir: str) -> None:
+    """Run a configured stream (foreachBatch or file sink) on
+    ``checkpoint_dir`` until it has processed all available input, then
+    return. T7: at most one instance per namespace. Spark rejects a second
+    query on a checkpoint within one session; the namespace lock extends
+    that to a second driver process, which raises SingletonLockHeld before
+    the query starts. The lock is released on any exit, and a hard kill
+    releases it with the process. A source without availableNow support
+    (the Python data sources) runs one batch instead, so a restart over an
+    uncommitted batch replays only that batch."""
+    with NamespaceLock(checkpoint_dir):
+        writer.option("checkpointLocation", checkpoint_dir).trigger(
+            availableNow=True
+        ).start().awaitTermination()
+
+
+def write_sink_batch(df: DataFrame, out_dir: str, batch_id: int) -> None:
     """Overwrite-by-batch-id: replaying batch N after a crash overwrites its
     own directory — the write is idempotent, hence exactly-once end-to-end
     (deterministic replay x idempotent sink)."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
-
-    return write_batch
+    df.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
 
 
 def run_envelope_stream(
@@ -140,14 +162,12 @@ def run_envelope_stream(
     and ``topic_offsets.json`` (data_event_checkpoint), driver-side JSON
     committed by temp file + fsync + rename (streaming/state_table.py).
     """
-    sink = _idempotent_parquet_sink(out_dir)
     done = [0]
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if fail_after_batches is not None and done[0] >= fail_after_batches:
             raise RuntimeError(f"injected crash before batch {batch_id}")
-        env = envelope_pipeline_df(batch_df)
-        sink(env, batch_id)
+        write_sink_batch(envelope_pipeline_df(batch_df), out_dir, batch_id)
         if state_dir is not None:
             # module attributes, looked up per batch (callers may swap them)
             committed = read_sink_batch(spark, out_dir, batch_id)
@@ -158,24 +178,27 @@ def run_envelope_stream(
         done[0] += 1
 
     events = load_events_stream(spark, source_dir, max_files_per_trigger)
-    # T7: at most one instance per namespace. Spark rejects a second query
-    # on this checkpoint within THIS session; the namespace lock
-    # (streaming/singleton.py) extends the guarantee to a second driver
-    # process — the reference's ZKLock
-    # (base_parse_replication_stream.py:126-131), kept on the checkpoint's
-    # own storage. Released on any exit, clean or injected-crash; a hard
-    # kill leaves a dead-pid lock the next instance breaks as stale.
-    from mysql_streamer_spark.streaming.singleton import NamespaceLock
-
-    with NamespaceLock(checkpoint_dir):
-        query = (
-            events.writeStream.foreachBatch(process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    drain(events.writeStream.foreachBatch(process), checkpoint_dir)
     return done[0]
+
+
+def run_changelog_stream(
+    spark: SparkSession,
+    source_dir: str,
+    out_dir: str,
+    checkpoint_dir: str,
+    max_files_per_trigger: int = 1,
+) -> None:
+    """The reference's changelog_mode as a checkpointed stream (its second
+    binary, batch/parse_replication_stream.py with changelog_mode: true):
+    each micro-batch projects admitted row events to the constant
+    {table_schema, table_name, id} changelog shape under its batch id."""
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        write_sink_batch(changelog_from_cdc(events_as_cdc(batch_df)), out_dir, batch_id)
+
+    events = load_events_stream(spark, source_dir, max_files_per_trigger)
+    drain(events.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def read_sink(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -217,15 +240,12 @@ def run_dedup_stream(
         .select("event_id", "ts", "user_id", "event_type")
     )
     with pinned_state_partitions(spark, state_partitions):
-        query = (
+        drain(
             deduped.writeStream.format("parquet")
             .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            checkpoint_dir,
         )
-        query.awaitTermination()
 
 
 def windowed_counts_df(
@@ -270,15 +290,12 @@ def run_windowed_stream(
     events = load_events_stream(spark, source_dir, max_files_per_trigger)
     agg = windowed_counts_df(events, window=window, watermark=watermark)
     with pinned_state_partitions(spark, state_partitions):
-        query = (
+        drain(
             agg.writeStream.format("parquet")
             .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            checkpoint_dir,
         )
-        query.awaitTermination()
 
 
 def run_session_window_stream(
@@ -310,15 +327,12 @@ def run_session_window_stream(
         )
     )
     with pinned_state_partitions(spark, state_partitions):
-        query = (
+        drain(
             agg.writeStream.format("parquet")
             .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            checkpoint_dir,
         )
-        query.awaitTermination()
 
 
 def run_interval_join_stream(
@@ -385,15 +399,12 @@ def run_interval_join_stream(
         (F.unix_micros("p_ts") - F.unix_micros("c_ts")).alias("gap_us"),
     )
     with pinned_state_partitions(spark, state_partitions):
-        query = (
+        drain(
             joined.writeStream.format("parquet")
             .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            checkpoint_dir,
         )
-        query.awaitTermination()
 
 
 def run_upsert_stream(
@@ -454,13 +465,7 @@ def run_upsert_stream(
         done[0] += 1
 
     events = load_events_stream(spark, source_dir, max_files_per_trigger)
-    query = (
-        events.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    drain(events.writeStream.foreachBatch(process), checkpoint_dir)
     return done[0]
 
 

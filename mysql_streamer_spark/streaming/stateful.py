@@ -91,6 +91,7 @@ def run_session_stream(
 ) -> None:
     from mysql_streamer_spark.streaming.runner import (
         STATE_PARTITIONS,
+        drain,
         load_events_stream,
         pinned_state_partitions,
         use_rocksdb_state,
@@ -99,13 +100,10 @@ def run_session_stream(
     use_rocksdb_state(spark)
     events = load_events_stream(spark, source_dir, max_files_per_trigger)
     with pinned_state_partitions(spark, state_partitions or STATE_PARTITIONS):
-        query = (
+        drain(
             sessionize_stream(events)
             .writeStream.format("parquet")
             .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            checkpoint_dir,
         )
-        query.awaitTermination()

@@ -23,7 +23,6 @@ from __future__ import annotations
 from typing import TYPE_CHECKING, Any, Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import SparkSession
@@ -172,31 +171,27 @@ def run_profile_stream(
     max_files_per_trigger: int = 1,
     state_partitions: int | None = None,
 ) -> None:
-    """availableNow drain; every batch's emitted profile rows append to the
-    sink tagged with their batch id, so the sink holds the profile's full
-    revision history and ``latest per user`` is the materialized view."""
+    """availableNow drain; every batch's emitted profile rows land in the
+    sink under their batch id (a replayed batch overwrites its own
+    directory), so the sink holds the profile's full revision history and
+    ``latest per user`` is the materialized view."""
     from mysql_streamer_spark.streaming.runner import (
         STATE_PARTITIONS,
+        drain,
         load_events_stream,
         pinned_state_partitions,
         use_rocksdb_state,
+        write_sink_batch,
     )
 
     use_rocksdb_state(spark)
     events = load_events_stream(spark, source_dir, max_files_per_trigger)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(out_dir)
-
     with pinned_state_partitions(spark, state_partitions or STATE_PARTITIONS):
-        query = (
+        drain(
             profile_stream(events)
-            .writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
+            .writeStream.foreachBatch(
+                lambda df, batch_id: write_sink_batch(df, out_dir, batch_id)
+            )
+            .outputMode("update"),
+            checkpoint_dir,
         )
-        query.awaitTermination()

@@ -302,3 +302,42 @@ def test_vacuum_after_tighter_vacuum_skips_missing_manifests(
     report = vacuum(out, keep_versions=3)
     assert report["head_version"] == 3
     assert read_committed(spark, out).count() == 4
+
+
+def _record_fsyncs(monkeypatch) -> set[int]:
+    """Inodes of every file ``os.fsync`` is called on from now on."""
+    synced: set[int] = set()
+    real = os.fsync
+
+    def fsync(fd):
+        synced.add(os.fstat(fd).st_ino)
+        real(fd)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    return synced
+
+
+def test_jsonl_shard_is_fsynced_before_its_commit_message(tmp_path, monkeypatch):
+    """A staged shard is durable before commit() can name it in a manifest."""
+    from pyspark.sql import Row
+
+    from mysql_streamer_spark.connectors.python_source import ManifestJsonlWriter
+
+    synced = _record_fsyncs(monkeypatch)
+    writer = ManifestJsonlWriter({"path": str(tmp_path)}, None, overwrite=True)
+    msg = writer.write(iter([Row(a=1), Row(a=2)]))
+    assert msg.rows == 2
+    assert os.stat(msg.staged).st_ino in synced
+
+
+def test_manifest_part_is_fsynced_before_its_commit_message(tmp_path, monkeypatch):
+    """A part file is durable before commit() can name it in a manifest."""
+    import pyarrow as pa
+
+    from mysql_streamer_spark.connectors.manifest_sink import ManifestSinkWriter
+
+    synced = _record_fsyncs(monkeypatch)
+    writer = ManifestSinkWriter({"path": str(tmp_path)})
+    msg = writer.write(iter(pa.table({"a": [1, 2]}).to_batches()))
+    assert msg.n_rows == 2
+    assert os.stat(os.path.join(tmp_path, msg.filename)).st_ino in synced

@@ -178,28 +178,55 @@ def test_concurrent_acquirers_yield_exactly_one_winner(tmp_path):
         p.wait()
 
 
-def test_envelope_stream_runs_under_the_lock(spark, sf_dir, tmp_path):
-    """Integration: a live foreign holder on the checkpoint namespace
-    stops run_envelope_stream before it writes anything."""
-    from mysql_streamer_spark.streaming.runner import run_envelope_stream
+#: every ``runner.drain`` entry point -> its module under streaming/
+DRAIN_ENTRY_POINTS = {
+    "run_envelope_stream": "runner",
+    "run_dedup_stream": "runner",
+    "run_windowed_stream": "runner",
+    "run_session_window_stream": "runner",
+    "run_interval_join_stream": "runner",
+    "run_upsert_stream": "runner",
+    "run_changelog_stream": "runner",
+    "run_session_stream": "stateful",
+    "run_profile_stream": "transform_state",
+    "run_ddl_barrier_stream": "ddl_barrier",
+}
 
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    os.symlink(
-        os.path.join(sf_dir, "events.parquet"), os.path.join(src, "events.parquet")
-    )
-    ckpt = str(tmp_path / "ckpt")
+
+@pytest.mark.parametrize("entry", list(DRAIN_ENTRY_POINTS))
+def test_drain_runs_under_the_lock(spark, sf_dir, tmp_path, entry):
+    """Integration: a live foreign holder on the checkpoint namespace stops
+    every drain entry point before it writes anything (the upsert stream's
+    output is its state table, the DDL barrier's its sink and
+    ``out/_state``); once the holder is gone the drain completes and
+    leaves no lock behind."""
+    import importlib
+
+    module = f"mysql_streamer_spark.streaming.{DRAIN_ENTRY_POINTS[entry]}"
+    run = getattr(importlib.import_module(module), entry)
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    args = (spark, src, out, ckpt)
+    if entry == "run_ddl_barrier_stream":
+        from mysql_streamer_spark.streaming.ddl_barrier import stage_barrier_feed
+
+        stage_barrier_feed(spark, sf_dir, src)
+        args += (f"{out}/_state",)
+    else:
+        os.makedirs(src)
+        os.symlink(
+            os.path.join(sf_dir, "events.parquet"),
+            os.path.join(src, "events.parquet"),
+        )
     holder = _holder_proc(ckpt)
     try:
         with pytest.raises(SingletonLockHeld):
-            run_envelope_stream(spark, src, str(tmp_path / "out"), ckpt)
-        assert not os.path.exists(str(tmp_path / "out"))
+            run(*args)
+        assert not os.path.exists(out)
     finally:
         holder.kill()
         holder.wait()
-    # holder gone: completes and leaves no lock behind
-    n = run_envelope_stream(spark, src, str(tmp_path / "out"), ckpt)
-    assert n >= 1
+    run(*args)
+    assert os.listdir(out)
     assert not os.path.exists(os.path.join(ckpt, LOCK_FILENAME))
 
 

@@ -278,3 +278,37 @@ def test_upsert_state_crash_restart_equals_batch_latest(
         | (F.col("g.message_type") != F.col("e.message_type"))
     ).count()
     assert mismatches == 0
+
+
+def test_profile_stream_replay_does_not_duplicate_its_batch(spark, sf_dir, tmp_path):
+    """A batch replayed after a crash between its sink write and the engine
+    commit overwrites its own sink directory instead of appending a second
+    copy of its profile rows."""
+    import os
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from mysql_streamer_spark.streaming.transform_state import run_profile_stream
+    from mysql_streamer_spark.tables import table_path
+
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    os.makedirs(src)
+    events = pq.read_table(table_path(sf_dir, "events"))
+    odd = pc.equal(pc.bit_wise_and(events["event_id"], 1), 1)
+    for i, mask in enumerate((pc.invert(odd), odd)):
+        path = f"{src}/half_{i}.parquet"
+        pq.write_table(events.filter(mask), path)
+        os.utime(path, (1_000_000 * (i + 1),) * 2)  # batch order = file order
+
+    run_profile_stream(spark, src, out, ckpt)
+    last = max(int(f) for f in os.listdir(f"{ckpt}/commits") if f.isdigit())
+    assert last >= 1
+    for f in (f"{last}", f".{last}.crc"):  # crash after the sink write
+        os.remove(f"{ckpt}/commits/{f}")
+    run_profile_stream(spark, src, out, ckpt)
+    assert os.path.exists(f"{ckpt}/commits/{last}"), "the batch was not replayed"
+
+    rows = spark.read.parquet(out)
+    assert rows.filter(rows.batch_id == last).count() > 0
+    assert rows.groupBy("user_id", "batch_id").count().filter("count > 1").count() == 0
