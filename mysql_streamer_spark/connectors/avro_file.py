@@ -15,10 +15,11 @@ Scale shape: WRITE is ``foreachPartition``-free — a ``mapInArrow`` pass
 emits one OCF file per input partition (the parquet part-file layout), so
 1000 executors write 1000+ files with zero driver involvement and no
 shuffle. READ lists the files with Spark's ``binaryFile`` source (one row
-per file, whole-file content) and decodes blocks in a second ``mapInArrow``
-pass — each file decodes independently, parallelism = file count, the same
-contract as a parquet scan over part files. Record encode/decode reuses
-the spec-pinned kernel in ``avro_wire.py``.
+per file, whole-file content) and decodes blocks through ``avro_wire.py``'s
+decode driver, a second ``mapInArrow`` pass — each file decodes
+independently, parallelism = file count, the same contract as a parquet
+scan over part files. Record encode/decode, the flat columns and the meta
+array reuse the spec-pinned kernel and envelope layout in ``avro_wire.py``.
 """
 
 from __future__ import annotations
@@ -173,9 +174,10 @@ def write_envelope_avro_files(env, path: str, codec: str = "deflate") -> None:
 
     from mysql_streamer_spark.connectors.avro_wire import (
         ENVELOPE_SCHEMA,
-        _FLAT_FIELDS,
+        _flat_frame,
+        _flat_names,
+        _meta_for_row,
     )
-    from pyspark.sql import functions as F
 
     os.makedirs(path, exist_ok=True)
 
@@ -190,15 +192,8 @@ def write_envelope_avro_files(env, path: str, codec: str = "deflate") -> None:
         def rows() -> Iterator[dict]:
             for batch in batches:
                 for row in batch.to_pylist():
-                    rec = dict(row)
-                    rec["meta"] = [
-                        {
-                            "cluster_name": row["cluster_name"],
-                            "log_file": row["log_file"] or "",
-                            "log_pos": int(row["log_pos"] or 0),
-                        }
-                    ]
-                    yield rec
+                    row["meta"] = _meta_for_row(row, meta_version=1)
+                    yield row
 
         with open(os.path.join(path, fname), "wb") as fh:
             n = write_ocf(
@@ -209,12 +204,7 @@ def write_envelope_avro_files(env, path: str, codec: str = "deflate") -> None:
             [pa.array([fname]), pa.array([n], pa.int64())], ["file", "n_rows"]
         )
 
-    flat = env.select(
-        *[
-            F.unix_micros(F.col(c)).alias(c) if c == "timestamp" else F.col(c)
-            for c in _FLAT_FIELDS
-        ]
-    )
+    flat = _flat_frame(env, _flat_names(ENVELOPE_SCHEMA))
     # the collect() drives the write; the returned manifest rows are tiny
     manifest = flat.mapInArrow(write_batches, "file string, n_rows long").collect()
     if not manifest:
@@ -232,57 +222,16 @@ def write_envelope_avro_files(env, path: str, codec: str = "deflate") -> None:
 
 def read_envelope_avro_files(spark, path: str):
     """OCF source: Spark's binaryFile listing (one row per file) decoded
-    file-parallel back to the flat envelope columns (+ meta_ok witness)."""
-    import pyarrow as pa
-
-    from mysql_streamer_spark.connectors.avro_wire import ENVELOPE_SCHEMA
+    file-parallel by the shared decode driver — each blob yields all its
+    records — back to the flat envelope columns (+ meta_ok witness)."""
+    from mysql_streamer_spark.connectors.avro_wire import (
+        ENVELOPE_SCHEMA,
+        _decode_envelopes,
+    )
 
     files = spark.read.format("binaryFile").load(os.path.join(path, "*.avro"))
-
-    out_fields = [
-        ("schema_id", pa.int32()),
-        ("cluster_name", pa.string()),
-        ("database_name", pa.string()),
-        ("table_name", pa.string()),
-        ("message_type", pa.string()),
-        ("ts_us", pa.int64()),
-        ("log_file", pa.string()),
-        ("log_pos", pa.int64()),
-        ("offset", pa.int32()),
-        ("txn_order", pa.int64()),
-        ("pk", pa.int64()),
-        ("payload_k", pa.int32()),
-        ("payload_val", pa.float64()),
-        ("previous_payload_val", pa.float64()),
-        ("meta_ok", pa.bool_()),
-    ]
-    arrow_schema = pa.schema([pa.field(n, t) for n, t in out_fields])
-
-    def decode_files(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            content_idx = batch.schema.names.index("content")
-            for blob in batch.column(content_idx).to_pylist():
-                cols: dict[str, list] = {n: [] for n, _ in out_fields}
-                for rec in read_ocf(blob, ENVELOPE_SCHEMA):
-                    meta = rec.pop("meta")
-                    cols["meta_ok"].append(
-                        len(meta) == 1
-                        and meta[0]["cluster_name"] == rec["cluster_name"]
-                        and meta[0]["log_file"] == (rec["log_file"] or "")
-                        and meta[0]["log_pos"] == int(rec["log_pos"] or 0)
-                    )
-                    cols["ts_us"].append(rec.pop("timestamp"))
-                    for k, v in rec.items():
-                        cols[k].append(v)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(cols[n], t) for n, t in out_fields],
-                    schema=arrow_schema,
-                )
-
-    spark_schema = (
-        "schema_id int, cluster_name string, database_name string, "
-        "table_name string, message_type string, ts_us long, log_file string, "
-        "log_pos long, offset int, txn_order long, pk long, payload_k int, "
-        "payload_val double, previous_payload_val double, meta_ok boolean"
+    return _decode_envelopes(
+        files.select("content"),
+        ENVELOPE_SCHEMA,
+        lambda blob: read_ocf(blob, ENVELOPE_SCHEMA),
     )
-    return files.select("content").mapInArrow(decode_files, spark_schema)

@@ -7,9 +7,9 @@ record it attaches is ``schema/avro_schema/log_transaction_id_v1.avsc``
 ({cluster_name: string, log_file: string, log_pos: int}, registered by
 replication_handler/components/schema_wrapper.py:97-141).
 
-This container ships neither the spark-avro datasource nor a Python avro
-package, so the binary encoding itself is implemented here from the public
-Avro 1.11 specification (https://avro.apache.org/docs/1.11.1/specification/):
+The binary encoding is implemented here from the public Avro 1.11
+specification (https://avro.apache.org/docs/1.11.1/specification/), with
+neither the spark-avro datasource nor a Python avro package:
 
 - ``int``/``long``: zigzag then base-128 little-endian varint;
 - ``float``/``double``: 4/8 bytes IEEE-754 little-endian;
@@ -19,12 +19,24 @@ Avro 1.11 specification (https://avro.apache.org/docs/1.11.1/specification/):
 - ``array``: non-empty count blocks terminated by a zero count.
 
 The kernel is schema-driven (any schema built from the primitives above
-encodes/decodes), and Spark-side it runs under ``mapInArrow`` — Arrow batch
-transfer, no row-at-a-time Python UDF serialization — the same justified
-Python path as the multimodal decoders. Correctness is proven two ways:
-unit tests pin the spec's own byte examples (zigzag vectors, string
-framing), and the ``cdc_avro_roundtrip`` query encodes the full envelope,
-decodes it back, and hash-matches the DIRECT envelope oracle, mirroring
+encodes/decodes), and Spark-side every codec — plaintext and Confluent
+here, secure in ``secure_wire.py``, files in ``avro_file.py`` — runs
+through one driver pair under ``mapInArrow`` (Arrow batch transfer, no
+row-at-a-time Python UDF serialization). The envelope's wire layout is
+decided once, here: ``_flat_frame`` selects what an encoder reads
+(``timestamp`` as int64 micros), ``_meta_for_row`` builds every
+transaction-id meta array, ``_encode_map`` runs a per-row encode,
+``_decode_map`` runs a ``bytes -> records`` function (a frame yields one
+record, an OCF blob many), and ``_decode_envelopes`` turns each envelope
+record into output columns derived from its Avro schema (``meta`` becomes
+the ``meta_ok`` witness, ``timestamp`` becomes ``ts_us``).
+
+This Python kernel is the codec on every deployment. Correctness is proven
+three ways: unit tests pin the spec's own byte examples (zigzag vectors,
+string framing); ``tests/test_avro_differential.py`` pins the bytes
+against the Apache Avro Java implementation that ships with Spark core;
+and the ``cdc_avro_roundtrip`` query encodes the full envelope, decodes it
+back, and hash-matches the DIRECT envelope oracle, mirroring
 ``cdc_debezium_roundtrip``'s lossless-adapter proof.
 """
 
@@ -32,6 +44,7 @@ from __future__ import annotations
 
 import json
 import struct
+from functools import partial
 from typing import Any, Iterator
 
 #: The meta record, field-for-field the reference's
@@ -652,43 +665,19 @@ class _Unresolvable(ValueError):
 
 
 # ---------------------------------------------------------------------------
-# Spark integration (Arrow-batched, schema-driven)
+# Spark integration: the envelope's wire layout and the one driver pair
 # ---------------------------------------------------------------------------
 
-#: envelope columns in schema order, minus the derived ``meta`` array
-_FLAT_FIELDS = [f["name"] for f in ENVELOPE_SCHEMA["fields"] if f["name"] != "meta"]
-
-
-_JVM_AVRO_PROBE_SCHEMA = (
-    '{"type":"record","name":"probe","fields":[{"name":"x","type":"int"}]}'
-)
-_jvm_avro_cache: dict[str, bool] = {}
-
-
-def jvm_avro_available(spark) -> bool:
-    """True when the spark-avro datasource is on the JVM classpath (its
-    ``to_avro``/``from_avro`` expressions actually evaluate). This
-    container ships Spark without the spark-avro module, so the answer
-    here is False and the Python kernel carries the codec; a production
-    100 TB deployment loads the jar and the same API silently takes the
-    whole-stage-codegen JVM path instead. Probed once per session (keyed
-    by applicationId — stable for the session's lifetime, never reused
-    by a rebuilt session the way a recycled id() could be)."""
-    key = spark.sparkContext.applicationId
-    if key not in _jvm_avro_cache:
-        try:
-            from pyspark.sql import functions as F
-            from pyspark.sql.avro.functions import to_avro
-
-            spark.range(1).select(
-                to_avro(
-                    F.struct(F.lit(1).alias("x")), _JVM_AVRO_PROBE_SCHEMA
-                ).alias("v")
-            ).collect()
-            _jvm_avro_cache[key] = True
-        except Exception:
-            _jvm_avro_cache[key] = False
-    return _jvm_avro_cache[key]
+#: Avro primitive -> the Arrow type (alias) its decoded column carries
+_ARROW_ALIAS = {
+    "int": "int32",
+    "long": "int64",
+    "float": "float",
+    "double": "double",
+    "string": "string",
+    "bytes": "binary",
+    "boolean": "bool",
+}
 
 
 def _select_envelope_schema(gtid_mode: bool, meta_version: int) -> dict:
@@ -703,50 +692,21 @@ def _select_envelope_schema(gtid_mode: bool, meta_version: int) -> dict:
     raise ValueError(f"unknown meta_version {meta_version}")
 
 
-def _envelope_struct_for_jvm(env, meta_version: int = 1):
-    """Envelope columns -> one struct column laid out field-for-field like
-    the selected envelope schema, ready for spark-avro's to_avro.
-    Timestamps stay TimestampType (spark-avro writes timestamp-micros);
-    the v1 meta int range check is enforced with raise_error so the JVM
-    path fails as loudly as the kernel path (v2 carries long natively).
-    Binlog-position mode only: the GTID wire's union-of-records meta has
-    no faithful spark-avro struct mapping, so gtid_mode never routes
-    here (see envelope_to_avro)."""
-    from pyspark.sql import functions as F
-
-    checked_pos = F.when(
-        (F.col("log_pos") >= F.lit(2**31)) | (F.col("log_pos") < F.lit(-(2**31))),
-        F.raise_error(
-            F.concat(
-                F.lit("log_pos "),
-                F.col("log_pos").cast("string"),
-                F.lit(
-                    " exceeds the v1 meta schema's 32-bit int range; "
-                    "register a long-typed v2 meta schema before encoding"
-                ),
-            )
-        ).cast("long"),
-    ).otherwise(F.coalesce(F.col("log_pos"), F.lit(0)))
-    pos = (
-        checked_pos.cast("int")
-        if meta_version == 1
-        else F.coalesce(F.col("log_pos"), F.lit(0))
-    )
-    meta = F.array(
-        F.struct(
-            F.col("cluster_name").alias("cluster_name"),
-            F.coalesce(F.col("log_file"), F.lit("")).alias("log_file"),
-            pos.alias("log_pos"),
-        )
-    )
-    return F.struct(*[F.col(c) for c in _FLAT_FIELDS], meta.alias("meta"))
+def _flat_names(record: dict) -> list[str]:
+    """A message record's columns in schema order, minus the derived
+    ``meta`` array."""
+    return [f["name"] for f in record["fields"] if f["name"] != "meta"]
 
 
 def _meta_for_row(row: dict, meta_version: int) -> list[dict]:
-    """The transaction-id meta array for one binlog-position-mode row —
-    shared by the plaintext and secure envelope encoders. v1 range-checks
-    log_pos against the schema's 32-bit int (a 64-bit position would
-    encode as a varint spec-strict int decoders reject); v2 carries long."""
+    """The transaction-id meta array of one envelope row — every encoder's
+    and the decoders' ``meta_ok`` witness's. A GTID-mode row (one carrying
+    ``gtid``) gets the global_transaction_id record; otherwise v1
+    range-checks log_pos against the schema's 32-bit int (a 64-bit position
+    would encode as a varint spec-strict int decoders reject); v2 carries
+    long."""
+    if "gtid" in row:
+        return [{"cluster_name": row["cluster_name"], "gtid": row["gtid"]}]
     log_pos = int(row["log_pos"] or 0)
     if meta_version == 1 and not -(2**31) <= log_pos < 2**31:
         raise ValueError(
@@ -762,213 +722,164 @@ def _meta_for_row(row: dict, meta_version: int) -> list[dict]:
     ]
 
 
-def envelope_to_avro(
-    env,
-    gtid_mode: bool = False,
-    use_jvm: bool | None = None,
-    meta_version: int = 1,
-):
+def _flat_frame(df, names: list[str], *more):
+    """The encode driver's input: the ``names`` columns of ``df``, with
+    ``timestamp`` as exact int64 micros (the timestamp-micros logical type's
+    base encoding, converted JVM-side so no float roundtrip), then the
+    ``more`` columns."""
+    from pyspark.sql import functions as F
+
+    return df.select(
+        *[
+            F.unix_micros(F.col(c)).alias(c) if c == "timestamp" else F.col(c)
+            for c in names
+        ],
+        *more,
+    )
+
+
+def _encode_map(flat, encode_row, keys: tuple[str, ...] = ()):
+    """The one encode driver: flat frame -> one ``value: binary`` message per
+    row, ``encode_row(row, out)`` appending a row's message to ``out`` (the
+    compile_encoder convention). The ``keys`` columns of the frame ride
+    alongside, ahead of ``value``. Arrow batch in, Python encode loop,
+    Arrow batch out — map-side only, no shuffle."""
+    import pyarrow as pa
+    from pyspark.sql.types import BinaryType, StructField, StructType
+
+    def encode_batches(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        for batch in batches:
+            out = []
+            for row in batch.to_pylist():
+                buf = bytearray()
+                encode_row(row, buf)
+                out.append(bytes(buf))
+            yield pa.RecordBatch.from_arrays(
+                [*(batch.column(k) for k in keys), pa.array(out, pa.binary())],
+                [*keys, "value"],
+            )
+
+    schema = StructType(
+        [StructField(k, flat.schema[k].dataType) for k in keys]
+        + [StructField("value", BinaryType())]
+    )
+    return flat.mapInArrow(encode_batches, schema)
+
+
+def _encode_envelopes(df, record: dict, meta_version: int):
+    """Envelope rows -> Avro messages of ``record``, each carrying the meta
+    array _meta_for_row derives from its position columns."""
+    enc = compile_encoder(record)
+
+    def encode_row(row: dict, out: bytearray) -> None:
+        row["meta"] = _meta_for_row(row, meta_version)
+        enc(row, out)
+
+    return _encode_map(_flat_frame(df, _flat_names(record)), encode_row)
+
+
+def _decode_frame(dec, raw: bytes, pos: int = 0) -> dict:
+    """The one record ``dec`` reads from ``raw`` at ``pos``; a frame holds
+    exactly one record, so bytes left after it are an error."""
+    rec, end = dec(raw, pos)
+    if end != len(raw):
+        raise ValueError("trailing bytes after avro record")
+    return rec
+
+
+def _record_fields(record: dict) -> list:
+    """The Arrow output columns of records decoded against ``record``: its
+    fields in schema order, ``meta`` dropped (the ``meta_ok`` witness
+    stands for it) and ``timestamp`` as ``ts_us`` int64 micros."""
+    import pyarrow as pa
+
+    fields = []
+    for f in record["fields"]:
+        name, t = f["name"], f["type"]
+        if name == "meta":
+            continue
+        if isinstance(t, list):  # nullable: ["null", T]
+            t = next(b for b in t if b != "null")
+        fields.append(
+            pa.field(
+                "ts_us" if name == "timestamp" else name,
+                pa.type_for_alias(_ARROW_ALIAS[_type_name(t)]),
+            )
+        )
+    return fields
+
+
+def _decode_map(wire, fields: list, records):
+    """The one decode driver: ``records(*cells)`` turns one input row (its
+    cells in column order: a frame or an OCF blob, plus any message key)
+    into decoded output rows, dicts keyed by the names of the Arrow
+    ``fields`` — one for a frame, many for an OCF blob. The Spark schema is
+    derived from ``fields``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    schema = pa.schema(fields)
+
+    def decode_batches(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        for batch in batches:
+            cols: dict[str, list] = {name: [] for name in schema.names}
+            for cells in zip(*(c.to_pylist() for c in batch.columns)):
+                for rec in records(*cells):
+                    for k, v in rec.items():
+                        cols[k].append(v)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(cols[f.name], f.type) for f in schema], schema=schema
+            )
+
+    return wire.mapInArrow(decode_batches, from_arrow_schema(schema))
+
+
+def _decode_envelopes(wire, record: dict, records, extra=()):
+    """Envelope decode over _decode_map: each record ``records(raw)`` yields
+    becomes ``record``'s columns (_record_fields), the ``meta_ok`` witness
+    (does the decoded meta array equal the one the encoder derives from the
+    decoded position columns — the array-of-record path's own roundtrip
+    witness), then the ``extra`` Arrow columns its records carry."""
+    import pyarrow as pa
+
+    def rows(raw):
+        for rec in records(raw):
+            # v2: a decoded position is compared, never range-checked
+            rec["meta_ok"] = rec.pop("meta") == _meta_for_row(rec, 2)
+            rec["ts_us"] = rec.pop("timestamp")
+            yield rec
+
+    fields = [*_record_fields(record), pa.field("meta_ok", pa.bool_()), *extra]
+    return _decode_map(wire, fields, rows)
+
+
+def envelope_to_avro(env, gtid_mode: bool = False, meta_version: int = 1):
     """Envelope DataFrame -> one ``value: binary`` column of Avro-encoded
-    messages (plus the record count preserved 1:1). Arrow batch in, python
-    encode loop per row, Arrow batch out — map-side only, no shuffle.
+    messages (the record count preserved 1:1), map-side only.
 
     ``gtid_mode`` mirrors the reference's two transaction-id kinds: the
     input must carry a ``gtid`` column, and the meta array encodes the
     global_transaction_id record through the UNION branch.
 
-    ``use_jvm`` selects the spark-avro ``to_avro`` fast path (None =
-    auto-detect via jvm_avro_available): same schema, same bytes, but the
-    codec runs inside whole-stage codegen with zero Python transfer —
-    the branch a real cluster with the spark-avro jar takes.
-
     ``meta_version=2`` publishes the long-typed transaction-id meta
     (TRANSACTION_ID_V2_SCHEMA) — required once binlog positions exceed 32
     bits; v1 fails loudly on such positions rather than emit varints
     spec-strict int decoders reject."""
-    import pyarrow as pa
-
-    if gtid_mode:
-        # spark-avro maps a non-null multi-record union (the two
-        # transaction-id meta kinds) to struct<member0,member1>, which the
-        # plain meta struct cannot satisfy — the GTID wire stays on the
-        # kernel path even where the jar is loadable
-        use_jvm = False
-    if use_jvm is None:
-        use_jvm = jvm_avro_available(env.sparkSession)
-    if use_jvm:
-        from pyspark.sql.avro.functions import to_avro
-
-        schema_json = json.dumps(_select_envelope_schema(gtid_mode, meta_version))
-        return env.select(
-            to_avro(
-                _envelope_struct_for_jvm(env, meta_version), schema_json
-            ).alias("value")
-        )
-
     schema = _select_envelope_schema(gtid_mode, meta_version)
-
-    def encode_batches(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        enc = compile_encoder(schema)
-        for batch in batches:
-            rows = batch.to_pylist()
-            out = []
-            for row in rows:
-                rec = dict(row)
-                if gtid_mode:
-                    rec["meta"] = [
-                        {
-                            "cluster_name": row["cluster_name"],
-                            "gtid": row["gtid"],
-                        }
-                    ]
-                else:
-                    rec["meta"] = _meta_for_row(row, meta_version)
-                buf = bytearray()
-                enc(rec, buf)
-                out.append(bytes(buf))
-            yield pa.RecordBatch.from_arrays([pa.array(out, pa.binary())], ["value"])
-
-    from pyspark.sql import functions as F
-
-    cols = _FLAT_FIELDS + (["gtid"] if gtid_mode else [])
-    # timestamp rides as exact int64 micros (the timestamp-micros logical
-    # type's base encoding) — converted JVM-side so no float roundtrip
-    flat = env.select(
-        *[
-            F.unix_micros(F.col(c)).alias(c) if c == "timestamp" else F.col(c)
-            for c in cols
-        ]
-    )
-    return flat.mapInArrow(encode_batches, "value binary")
+    return _encode_envelopes(env, schema, meta_version)
 
 
-def avro_to_envelope(
-    wire,
-    gtid_mode: bool = False,
-    use_jvm: bool | None = None,
-    meta_version: int = 1,
-):
+def avro_to_envelope(wire, gtid_mode: bool = False, meta_version: int = 1):
     """Inverse of envelope_to_avro: binary messages -> the flat envelope
-    columns plus ``meta_ok`` (does the decoded meta array equal the
-    position columns it was derived from — the array-of-record path's own
-    roundtrip witness; in gtid_mode the witness checks the decoded
-    global_transaction_id union branch instead).
-
-    ``use_jvm`` selects spark-avro's ``from_avro`` (None = auto-detect):
-    same columns out, decoded inside whole-stage codegen.
+    columns (``timestamp`` as ``ts_us``) plus ``meta_ok``; in gtid_mode the
+    witness checks the decoded global_transaction_id union branch.
 
     ``meta_version`` must match the writer's (consumers reading ACROSS
     versions go through decode_resolved, which applies the spec's
     int->long promotion for v1 data under a v2 reader)."""
-    import pyarrow as pa
-
-    if gtid_mode:
-        # same union-of-records limitation as the encode side
-        use_jvm = False
-    if use_jvm is None:
-        use_jvm = jvm_avro_available(wire.sparkSession)
-    if use_jvm:
-        from pyspark.sql import functions as F
-        from pyspark.sql.avro.functions import from_avro
-
-        # binlog-position mode only; gtid never routes here
-        schema_json = json.dumps(_select_envelope_schema(False, meta_version))
-        r = wire.select(from_avro(F.col("value"), schema_json).alias("r"))
-        meta0 = F.col("r.meta").getItem(0)
-        meta_ok = (
-            (F.size("r.meta") == 1)
-            & (meta0.getField("cluster_name") == F.col("r.cluster_name"))
-            & (
-                meta0.getField("log_file")
-                == F.coalesce(F.col("r.log_file"), F.lit(""))
-            )
-            & (
-                meta0.getField("log_pos").cast("long")
-                == F.coalesce(F.col("r.log_pos"), F.lit(0))
-            )
-        )
-        return r.select(
-            F.col("r.schema_id").alias("schema_id"),
-            F.col("r.cluster_name").alias("cluster_name"),
-            F.col("r.database_name").alias("database_name"),
-            F.col("r.table_name").alias("table_name"),
-            F.col("r.message_type").alias("message_type"),
-            F.unix_micros(F.col("r.timestamp")).alias("ts_us"),
-            F.col("r.log_file").alias("log_file"),
-            F.col("r.log_pos").alias("log_pos"),
-            F.col("r.offset").alias("offset"),
-            F.col("r.txn_order").alias("txn_order"),
-            F.col("r.pk").alias("pk"),
-            F.col("r.payload_k").alias("payload_k"),
-            F.col("r.payload_val").alias("payload_val"),
-            F.col("r.previous_payload_val").alias("previous_payload_val"),
-            meta_ok.alias("meta_ok"),
-        )
-
-    arrow_fields = [
-        pa.field("schema_id", pa.int32()),
-        pa.field("cluster_name", pa.string()),
-        pa.field("database_name", pa.string()),
-        pa.field("table_name", pa.string()),
-        pa.field("message_type", pa.string()),
-        pa.field("ts_us", pa.int64()),
-        pa.field("log_file", pa.string()),
-        pa.field("log_pos", pa.int64()),
-        pa.field("offset", pa.int32()),
-        pa.field("txn_order", pa.int64()),
-        pa.field("pk", pa.int64()),
-        pa.field("payload_k", pa.int32()),
-        pa.field("payload_val", pa.float64()),
-        pa.field("previous_payload_val", pa.float64()),
-    ]
-    if gtid_mode:
-        arrow_fields.append(pa.field("gtid", pa.string()))
-    arrow_fields.append(pa.field("meta_ok", pa.bool_()))
-    out_schema = pa.schema(arrow_fields)
     schema = _select_envelope_schema(gtid_mode, meta_version)
-
-    def decode_batches(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        dec = compile_decoder(schema)
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in arrow_fields}
-            for raw in batch.column(0).to_pylist():
-                rec, end = dec(raw, 0)
-                if end != len(raw):
-                    raise ValueError("trailing bytes after avro record")
-                meta = rec.pop("meta")
-                if gtid_mode:
-                    cols["meta_ok"].append(
-                        len(meta) == 1
-                        and meta[0]
-                        == {
-                            "cluster_name": rec["cluster_name"],
-                            "gtid": rec["gtid"],
-                        }
-                    )
-                else:
-                    cols["meta_ok"].append(
-                        len(meta) == 1
-                        and meta[0]["cluster_name"] == rec["cluster_name"]
-                        and meta[0]["log_file"] == (rec["log_file"] or "")
-                        and meta[0]["log_pos"] == int(rec["log_pos"] or 0)
-                    )
-                cols["ts_us"].append(rec.pop("timestamp"))
-                for k, v in rec.items():
-                    cols[k].append(v)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], f.type) for f in arrow_fields],
-                schema=out_schema,
-            )
-
-    spark_schema = (
-        "schema_id int, cluster_name string, database_name string, "
-        "table_name string, message_type string, ts_us long, log_file string, "
-        "log_pos long, offset int, txn_order long, pk long, payload_k int, "
-        "payload_val double, previous_payload_val double, "
-        + ("gtid string, " if gtid_mode else "")
-        + "meta_ok boolean"
-    )
-    return wire.mapInArrow(decode_batches, spark_schema)
+    dec = compile_decoder(schema)
+    return _decode_envelopes(wire, schema, lambda raw: (_decode_frame(dec, raw),))
 
 
 # ---------------------------------------------------------------------------
@@ -1003,95 +914,22 @@ SECURE_ENVELOPE_SCHEMA: dict = {
     ],
 }
 
-_SECURE_FLAT_NAMES = [f["name"] for f in SECURE_ENVELOPE_SCHEMA["fields"] if f["name"] != "meta"]
-
 
 def secure_envelope_to_avro(published):
     """Encrypted envelope (cdc/encryption.py's published form) -> Avro
-    binary messages. Same map-only mapInArrow shape as envelope_to_avro;
-    the ciphertext columns ride the spec's ``bytes`` framing."""
-    import pyarrow as pa
-
-    def encode_batches(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        enc = compile_encoder(SECURE_ENVELOPE_SCHEMA)
-        for batch in batches:
-            out = []
-            for row in batch.to_pylist():
-                rec = dict(row)
-                rec["meta"] = _meta_for_row(row, meta_version=1)
-                buf = bytearray()
-                enc(rec, buf)
-                out.append(bytes(buf))
-            yield pa.RecordBatch.from_arrays([pa.array(out, pa.binary())], ["value"])
-
-    from pyspark.sql import functions as F
-
-    flat = published.select(
-        *[
-            F.unix_micros(F.col(c)).alias(c) if c == "timestamp" else F.col(c)
-            for c in _SECURE_FLAT_NAMES
-        ]
-    )
-    return flat.mapInArrow(encode_batches, "value binary")
+    binary messages, the same encode driver as envelope_to_avro; the
+    ciphertext columns ride the spec's ``bytes`` framing."""
+    return _encode_envelopes(published, SECURE_ENVELOPE_SCHEMA, meta_version=1)
 
 
 def avro_to_secure_envelope(wire):
     """Inverse of secure_envelope_to_avro: binary messages back to the
     encrypted-envelope columns (plus ``meta_ok``), ready for
     cdc/encryption.py's decrypt_envelope."""
-    import pyarrow as pa
-
-    arrow_fields = [
-        pa.field("schema_id", pa.int32()),
-        pa.field("cluster_name", pa.string()),
-        pa.field("database_name", pa.string()),
-        pa.field("table_name", pa.string()),
-        pa.field("message_type", pa.string()),
-        pa.field("ts_us", pa.int64()),
-        pa.field("log_file", pa.string()),
-        pa.field("log_pos", pa.int64()),
-        pa.field("offset", pa.int32()),
-        pa.field("txn_order", pa.int64()),
-        pa.field("encryption_type", pa.string()),
-        pa.field("initialization_vector", pa.binary()),
-        pa.field("payload_ciphertext", pa.binary()),
-        pa.field("previous_payload_ciphertext", pa.binary()),
-        pa.field("meta_ok", pa.bool_()),
-    ]
-    out_schema = pa.schema(arrow_fields)
-
-    def decode_batches(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        dec = compile_decoder(SECURE_ENVELOPE_SCHEMA)
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in arrow_fields}
-            for raw in batch.column(0).to_pylist():
-                rec, end = dec(raw, 0)
-                if end != len(raw):
-                    raise ValueError("trailing bytes after avro record")
-                meta = rec.pop("meta")
-                cols["meta_ok"].append(
-                    len(meta) == 1
-                    and meta[0]["cluster_name"] == rec["cluster_name"]
-                    and meta[0]["log_file"] == (rec["log_file"] or "")
-                    and meta[0]["log_pos"] == int(rec["log_pos"] or 0)
-                )
-                cols["ts_us"].append(rec.pop("timestamp"))
-                for k, v in rec.items():
-                    cols[k].append(v)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], f.type) for f in arrow_fields],
-                schema=out_schema,
-            )
-
-    spark_schema = (
-        "schema_id int, cluster_name string, database_name string, "
-        "table_name string, message_type string, ts_us long, log_file string, "
-        "log_pos long, offset int, txn_order long, "
-        "encryption_type string, initialization_vector binary, "
-        "payload_ciphertext binary, previous_payload_ciphertext binary, "
-        "meta_ok boolean"
+    dec = compile_decoder(SECURE_ENVELOPE_SCHEMA)
+    return _decode_envelopes(
+        wire, SECURE_ENVELOPE_SCHEMA, lambda raw: (_decode_frame(dec, raw),)
     )
-    return wire.mapInArrow(decode_batches, spark_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1115,146 +953,89 @@ CONFLUENT_MAGIC = 0x00
 CONFLUENT_ENVELOPE_IDS: dict[int, int] = {1001: 1, 1002: 2}
 
 
-def envelope_to_confluent(env, id_col: str = "wire_schema_id"):
-    """Envelope DataFrame (+ an int ``id_col`` naming the registered writer
-    schema per row, keys of CONFLUENT_ENVELOPE_IDS) -> one ``value: binary``
-    column of Confluent-framed messages: magic 0x00 + big-endian schema id
-    + Avro body encoded with THAT id's writer schema.
+def _confluent_header(sid: int) -> bytes:
+    return bytes([CONFLUENT_MAGIC]) + sid.to_bytes(4, "big")
 
-    Scale shape: mapInArrow over the envelope partitioning — no shuffle,
-    encoders compiled once per task, the 5-byte header is a constant
-    prepend. Rows whose id routes to the v1 (int-positioned) schema are
-    range-checked exactly like envelope_to_avro's v1 path."""
-    import pyarrow as pa
 
+def envelope_to_confluent(env):
+    """Envelope DataFrame (+ an int ``wire_schema_id`` naming the registered
+    writer schema per row, keys of CONFLUENT_ENVELOPE_IDS) -> one
+    ``value: binary`` column of Confluent-framed messages: magic 0x00 +
+    big-endian schema id + Avro body encoded with THAT id's writer schema.
+
+    Scale shape: map-only over the envelope partitioning — no shuffle, the
+    5-byte header is a constant prepend. Rows whose id routes to the v1
+    (int-positioned) schema are range-checked exactly like
+    envelope_to_avro's v1 path."""
     from pyspark.sql import functions as F
 
     encoders = {
-        sid: (compile_encoder(_select_envelope_schema(False, mv)), mv)
+        sid: (
+            _confluent_header(sid),
+            compile_encoder(_select_envelope_schema(False, mv)),
+            mv,
+        )
         for sid, mv in CONFLUENT_ENVELOPE_IDS.items()
     }
 
-    def encode_batches(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            out = []
-            for row in batch.to_pylist():
-                sid = row[id_col]
-                try:
-                    enc, mv = encoders[sid]
-                except KeyError:
-                    raise ValueError(
-                        f"wire schema id {sid!r} is not registered "
-                        f"(known: {sorted(encoders)})"
-                    ) from None
-                rec = dict(row)
-                rec["meta"] = _meta_for_row(row, mv)
-                buf = bytearray()
-                buf.append(CONFLUENT_MAGIC)
-                buf.extend(sid.to_bytes(4, "big"))
-                enc(rec, buf)
-                out.append(bytes(buf))
-            yield pa.RecordBatch.from_arrays([pa.array(out, pa.binary())], ["value"])
+    def encode_row(row: dict, out: bytearray) -> None:
+        sid = row["wire_schema_id"]
+        try:
+            head, enc, mv = encoders[sid]
+        except KeyError:
+            raise ValueError(
+                f"wire schema id {sid!r} is not registered "
+                f"(known: {sorted(encoders)})"
+            ) from None
+        row["meta"] = _meta_for_row(row, mv)
+        out += head
+        enc(row, out)
 
-    flat = env.select(
-        *[
-            F.unix_micros(F.col(c)).alias(c) if c == "timestamp" else F.col(c)
-            for c in _FLAT_FIELDS
-        ],
-        F.col(id_col).cast("int").alias(id_col),
+    flat = _flat_frame(
+        env,
+        _flat_names(ENVELOPE_SCHEMA),
+        F.col("wire_schema_id").cast("int").alias("wire_schema_id"),
     )
-    return flat.mapInArrow(encode_batches, "value binary")
+    return _encode_map(flat, encode_row)
 
 
-def confluent_to_envelope(wire, reader_meta_version: int = 2):
+def confluent_to_envelope(wire):
     """Inverse of envelope_to_confluent — the standard-consumer path: parse
     the 5-byte header, resolve the WRITER schema from the registry by the
-    framed id, and decode the body against the consumer's own READER
+    framed id, and decode the body against the consumer's own v2 READER
     schema via the spec's schema-resolution rules (decode_resolved), so
     v1-written int positions surface as the v2 reader's longs.
 
-    Output: the flat envelope columns plus ``wire_schema_id`` (from the
-    header), ``header_ok`` (magic byte correct and id registered — a
-    non-Confluent or unknown-schema message fails loudly rather than
-    decode garbage), and the usual ``meta_ok`` witness."""
+    Output: the flat envelope columns, the usual ``meta_ok`` witness, then
+    ``wire_schema_id`` (from the header) and ``header_ok`` (magic byte
+    correct and id registered — a non-Confluent or unknown-schema message
+    fails loudly rather than decode garbage)."""
     import pyarrow as pa
 
-    reader = _select_envelope_schema(False, reader_meta_version)
-    writers = {
-        sid: _select_envelope_schema(False, mv)
-        for sid, mv in CONFLUENT_ENVELOPE_IDS.items()
-    }
-    same = {
-        sid: compile_decoder(writers[sid])
-        for sid, mv in CONFLUENT_ENVELOPE_IDS.items()
-        if mv == reader_meta_version
-    }
+    reader = ENVELOPE_SCHEMA_V2  # its long log_pos reads every writer's
+    decoders = {}
+    for sid, mv in CONFLUENT_ENVELOPE_IDS.items():
+        writer = _select_envelope_schema(False, mv)
+        decoders[sid] = (
+            compile_decoder(reader)
+            if writer == reader
+            else partial(decode_resolved, writer, reader)
+        )
 
-    arrow_fields = [
-        pa.field("schema_id", pa.int32()),
-        pa.field("cluster_name", pa.string()),
-        pa.field("database_name", pa.string()),
-        pa.field("table_name", pa.string()),
-        pa.field("message_type", pa.string()),
-        pa.field("ts_us", pa.int64()),
-        pa.field("log_file", pa.string()),
-        pa.field("log_pos", pa.int64()),
-        pa.field("offset", pa.int32()),
-        pa.field("txn_order", pa.int64()),
-        pa.field("pk", pa.int64()),
-        pa.field("payload_k", pa.int32()),
-        pa.field("payload_val", pa.float64()),
-        pa.field("previous_payload_val", pa.float64()),
-        pa.field("wire_schema_id", pa.int32()),
-        pa.field("header_ok", pa.bool_()),
-        pa.field("meta_ok", pa.bool_()),
-    ]
-    out_schema = pa.schema(arrow_fields)
+    def records(raw):
+        if len(raw) < 5:
+            raise ValueError("message shorter than the Confluent header")
+        magic = raw[0]
+        sid = int.from_bytes(raw[1:5], "big")
+        if magic != CONFLUENT_MAGIC or sid not in decoders:
+            raise ValueError(f"bad Confluent header: magic={magic} schema_id={sid}")
+        rec = _decode_frame(decoders[sid], raw, 5)
+        rec["wire_schema_id"] = sid
+        rec["header_ok"] = True
+        return (rec,)
 
-    def decode_batches(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in arrow_fields}
-            for raw in batch.column(0).to_pylist():
-                if len(raw) < 5:
-                    raise ValueError("message shorter than the Confluent header")
-                magic = raw[0]
-                sid = int.from_bytes(raw[1:5], "big")
-                if magic != CONFLUENT_MAGIC or sid not in writers:
-                    raise ValueError(
-                        f"bad Confluent header: magic={magic} schema_id={sid}"
-                    )
-                dec = same.get(sid)
-                if dec is not None:
-                    rec, end = dec(raw[5:], 0)
-                    end += 5
-                else:
-                    rec, end = decode_resolved(writers[sid], reader, raw, 5)
-                if end != len(raw):
-                    raise ValueError("trailing bytes after avro record")
-                meta = rec.pop("meta")
-                cols["meta_ok"].append(
-                    len(meta) == 1
-                    and meta[0]["cluster_name"] == rec["cluster_name"]
-                    and meta[0]["log_file"] == (rec["log_file"] or "")
-                    and int(meta[0]["log_pos"]) == int(rec["log_pos"] or 0)
-                )
-                cols["wire_schema_id"].append(sid)
-                cols["header_ok"].append(True)
-                cols["ts_us"].append(rec.pop("timestamp"))
-                for k, v in rec.items():
-                    cols[k].append(v)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], f.type) for f in arrow_fields],
-                schema=out_schema,
-            )
-
-    spark_schema = (
-        "schema_id int, cluster_name string, database_name string, "
-        "table_name string, message_type string, ts_us long, log_file string, "
-        "log_pos long, offset int, txn_order long, pk long, payload_k int, "
-        "payload_val double, previous_payload_val double, "
-        "wire_schema_id int, header_ok boolean, meta_ok boolean"
-    )
-    return wire.mapInArrow(decode_batches, spark_schema)
+    extra = [pa.field("wire_schema_id", pa.int32()), pa.field("header_ok", pa.bool_())]
+    return _decode_envelopes(wire, reader, records, extra)
 
 
 # ---------------------------------------------------------------------------
@@ -1294,47 +1075,31 @@ def payload_to_confluent(env):
     window) cannot be published by a strict producer and are filtered,
     exactly like the reference blocking on registration.
 
-    Scale shape: mapInArrow over the envelope partitioning; encoders are
-    compiled once per task from the broadcast registry dict."""
-    import pyarrow as pa
-
+    Scale shape: map-only over the envelope partitioning; one encoder per
+    registered schema, compiled once and shipped with the task."""
     from pyspark.sql import functions as F
 
-    schemas = registry_payload_schemas()
+    encoders = {
+        sid: (
+            _confluent_header(sid),
+            compile_encoder(schema),
+            [f["name"] for f in schema["fields"]],
+        )
+        for sid, schema in registry_payload_schemas().items()
+    }
 
-    def encode_batches(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        encoders: dict[int, tuple] = {}
-        for sid, schema in schemas.items():
-            enc = compile_encoder(schema)
-            names = [f["name"] for f in schema["fields"]]
-            encoders[sid] = (enc, names)
-        for batch in batches:
-            out, keys = [], []
-            for row in batch.to_pylist():
-                sid = row["schema_id"]
-                enc, names = encoders[sid]
-                rec = {
-                    name: row.get(_PAYLOAD_FIELD_MAP.get(name, "\x00missing"))
-                    for name in names
-                }
-                buf = bytearray()
-                buf.append(CONFLUENT_MAGIC)
-                buf.extend(sid.to_bytes(4, "big"))
-                enc(rec, buf)
-                out.append(bytes(buf))
-                keys.append(row["txn_order"])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(keys, pa.int64()),
-                    pa.array(out, pa.binary()),
-                ],
-                ["txn_order", "value"],
-            )
+    def encode_row(row: dict, out: bytearray) -> None:
+        head, enc, names = encoders[row["schema_id"]]
+        out += head
+        enc(
+            {name: row.get(_PAYLOAD_FIELD_MAP.get(name, "\x00missing")) for name in names},
+            out,
+        )
 
     flat = env.filter(F.col("schema_id").isNotNull()).select(
         "schema_id", "txn_order", "pk", "payload_k", "payload_val"
     )
-    return flat.mapInArrow(encode_batches, "txn_order long, value binary")
+    return _encode_map(flat, encode_row, keys=("txn_order",))
 
 
 def confluent_payload_decode(
@@ -1368,106 +1133,80 @@ def confluent_payload_decode(
         raise ValueError(f"on_error must be 'raise' or 'dlq', got {on_error!r}")
     dlq = on_error == "dlq"
 
+    fields = [
+        pa.field("schema_id", pa.int32()),
+        pa.field("database_name", pa.string()),
+        pa.field("table_name", pa.string()),
+        pa.field("txn_order", pa.int64()),
+        pa.field("pk", pa.int64()),
+        pa.field("payload_k", pa.int32()),
+        pa.field("payload_val", pa.float64()),
+        pa.field("header_ok", pa.bool_()),
+    ] + ([pa.field("error_kind", pa.string())] if dlq else [])
+
     schemas = registry_payload_schemas()
     latest_sid: dict[tuple[str, str], int] = {}
     if resolve_to_latest:
         reg = bootstrap_registry()
         for db, table in reg.tables():
             latest_sid[(db, table)] = reg.get(db, table).schema_id
+    decoders: dict[int, tuple] = {}
+    for sid, schema in schemas.items():
+        db = schema["namespace"].rsplit(".", 1)[-1]
+        table = schema["name"]
+        reader_id = latest_sid.get((db, table), sid)
+        if reader_id == sid:
+            dec = compile_decoder(schema)
+        else:
+            dec = partial(decode_resolved, schema, schemas[reader_id])
+        decoders[sid] = (dec, db, table)
 
-    out_schema = pa.schema(
-        [
-            pa.field("schema_id", pa.int32()),
-            pa.field("database_name", pa.string()),
-            pa.field("table_name", pa.string()),
-            pa.field("txn_order", pa.int64()),
-            pa.field("pk", pa.int64()),
-            pa.field("payload_k", pa.int32()),
-            pa.field("payload_val", pa.float64()),
-            pa.field("header_ok", pa.bool_()),
-        ]
-        + ([pa.field("error_kind", pa.string())] if dlq else [])
-    )
+    def classify(raw):
+        """(sid, db, table, rec) or raises ValueError with a stable
+        error-kind prefix the DLQ column records."""
+        # NULL / non-binary cells are poison pills too: without this
+        # guard they'd raise TypeError past the ValueError net below
+        # and crash the job in the exact mode DLQ promises to absorb.
+        if raw is None or len(raw) < 5 or raw[0] != CONFLUENT_MAGIC:
+            raise ValueError("bad_header")
+        sid = int.from_bytes(raw[1:5], "big")
+        if sid not in decoders:
+            raise ValueError("unregistered_schema")
+        dec, db, table = decoders[sid]
+        try:
+            rec = _decode_frame(dec, raw, 5)
+        except Exception:
+            raise ValueError("corrupt_body") from None
+        return sid, db, table, rec
 
-    def decode_batches(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        decoders: dict[int, tuple] = {}
-        for sid, schema in schemas.items():
-            db = schema["namespace"].rsplit(".", 1)[-1]
-            table = schema["name"]
-            reader_id = latest_sid.get((db, table), sid)
-            if reader_id == sid:
-                dec = compile_decoder(schema)
-            else:
-                reader = schemas[reader_id]
+    def records(key, raw):
+        try:
+            sid, db, table, rec = classify(raw)
+        except ValueError as ex:
+            if not dlq:
+                raise ValueError(
+                    f"{ex} (txn_order={key}); rerun with "
+                    "on_error='dlq' to route instead of fail"
+                ) from None
+            dead = dict.fromkeys(f.name for f in fields)
+            dead.update(txn_order=key, header_ok=False, error_kind=str(ex))
+            return (dead,)
+        k = rec.get("k")
+        row = {
+            "schema_id": sid,
+            "database_name": db,
+            "table_name": table,
+            "txn_order": key,
+            "pk": rec["pk"],
+            "payload_k": None if k is None else int(k),
+            "payload_val": rec.get("val"),
+            "header_ok": True,
+        }
+        if dlq:
+            row["error_kind"] = None
+        return (row,)
 
-                def dec(raw, pos, _w=schema, _r=reader):
-                    return decode_resolved(_w, _r, raw, pos)
-
-            decoders[sid] = (dec, db, table)
-        def classify(raw):
-            """(sid, db, table, rec) or raises ValueError with a stable
-            error-kind prefix the DLQ column records."""
-            # NULL / non-binary cells are poison pills too: without this
-            # guard they'd raise TypeError past the ValueError net below
-            # and crash the job in the exact mode DLQ promises to absorb.
-            if raw is None or len(raw) < 5 or raw[0] != CONFLUENT_MAGIC:
-                raise ValueError("bad_header")
-            sid = int.from_bytes(raw[1:5], "big")
-            if sid not in decoders:
-                raise ValueError("unregistered_schema")
-            dec, db, table = decoders[sid]
-            try:
-                rec, end = dec(raw[5:], 0)
-            except Exception:
-                raise ValueError("corrupt_body") from None
-            if end + 5 != len(raw):
-                raise ValueError("corrupt_body")
-            return sid, db, table, rec
-
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in out_schema}
-            keys = batch.column(0).to_pylist()
-            for i, raw in enumerate(batch.column(1).to_pylist()):
-                try:
-                    sid, db, table, rec = classify(raw)
-                except ValueError as ex:
-                    if not dlq:
-                        raise ValueError(
-                            f"{ex} (txn_order={keys[i]}); rerun with "
-                            "on_error='dlq' to route instead of fail"
-                        ) from None
-                    cols["schema_id"].append(None)
-                    cols["database_name"].append(None)
-                    cols["table_name"].append(None)
-                    cols["txn_order"].append(keys[i])
-                    cols["pk"].append(None)
-                    cols["payload_k"].append(None)
-                    cols["payload_val"].append(None)
-                    cols["header_ok"].append(False)
-                    cols["error_kind"].append(str(ex))
-                    continue
-                cols["schema_id"].append(sid)
-                cols["database_name"].append(db)
-                cols["table_name"].append(table)
-                cols["txn_order"].append(keys[i])
-                cols["pk"].append(rec["pk"])
-                k = rec.get("k")
-                cols["payload_k"].append(None if k is None else int(k))
-                cols["payload_val"].append(rec.get("val"))
-                cols["header_ok"].append(True)
-                if dlq:
-                    cols["error_kind"].append(None)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], f.type) for f in out_schema],
-                schema=out_schema,
-            )
-
-    return wire.mapInArrow(
-        decode_batches,
-        "schema_id int, database_name string, table_name string, "
-        "txn_order long, pk long, payload_k int, payload_val double, "
-        "header_ok boolean" + (", error_kind string" if dlq else ""),
-    )
+    return _decode_map(wire, fields, records)
 
 
 def canonical_value(schema: Any):

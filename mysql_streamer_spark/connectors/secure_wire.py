@@ -9,11 +9,10 @@ composed encrypted-publish path costs FOUR Python stage boundaries —
 
 Each boundary pays Arrow serialization both ways plus a Python worker
 round trip, and the cost is independent of parallelism (measured: a
-32-way spread of the feed moved cdc_secure_wire_roundtrip by <1%). The
-secure wire format has NO JVM fast path (unlike the plaintext envelope,
-whose ``to_avro`` branch exists when the spark-avro jar is loaded), so
-both sides always run Python kernels — fusing the cipher into the codec
-kernel halves the boundaries without changing where the work runs.
+32-way spread of the feed moved cdc_secure_wire_roundtrip by <1%). Every
+Avro codec in this package runs as a Python kernel (``avro_wire.py``'s
+encode and decode drivers), so fusing the cipher into the codec kernel
+halves the boundaries without changing where the work runs.
 
 The fusion changes WHERE the per-row work happens, never WHAT it is:
 
@@ -22,8 +21,10 @@ The fusion changes WHERE the per-row work happens, never WHAT it is:
   restored payload columns (``from_json``) — exactly the expressions the
   composed operators build, so float formatting and null semantics are
   byte-identical;
-- the kernels call the SAME ``_seal``/``_open`` cipher primitives and the
-  SAME compiled Avro encoder/decoder as the composed path.
+- the kernels call the SAME ``_seal``/``_open`` cipher primitives, the
+  SAME compiled Avro encoder/decoder and the SAME encode/decode drivers as
+  the composed path, so the envelope columns and the ``meta_ok`` witness
+  come from ``avro_wire.py``'s one layout.
 
 ``tests/test_secure_wire_fused.py`` pins both directions differentially
 against the composed operators (wire bytes bit-for-bit, restored rows
@@ -32,8 +33,6 @@ from the individually-verified cipher and codec operators they compose.
 """
 
 from __future__ import annotations
-
-from typing import TYPE_CHECKING, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -51,20 +50,21 @@ from mysql_streamer_spark.cdc.encryption import (
 )
 from mysql_streamer_spark.connectors.avro_wire import (
     SECURE_ENVELOPE_SCHEMA,
+    _decode_envelopes,
+    _decode_frame,
+    _encode_map,
+    _flat_frame,
+    _flat_names,
     _meta_for_row,
-    _SECURE_FLAT_NAMES,
     compile_decoder,
     compile_encoder,
 )
-
-if TYPE_CHECKING:  # pragma: no cover
-    import pyarrow as pa
 
 #: secure-envelope fields the JVM hands the fused encode kernel verbatim
 #: (everything but the two ciphertexts, which the kernel itself produces)
 _PLAIN_FLAT_NAMES = [
     n
-    for n in _SECURE_FLAT_NAMES
+    for n in _flat_names(SECURE_ENVELOPE_SCHEMA)
     if n not in ("payload_ciphertext", "previous_payload_ciphertext")
 ]
 
@@ -95,8 +95,6 @@ def seal_to_avro(
     ``secure_envelope_to_avro(encrypt_envelope(env, cfg))`` (or the
     ``_with_ring`` form when ``etype_col`` routes rows to key
     generations) — bit-for-bit on the wire, pinned differentially."""
-    import pyarrow as pa
-
     ring = _resolve_ring(config_or_ring)
     if etype_col is None:
         if len(ring) != 1:
@@ -120,65 +118,37 @@ def seal_to_avro(
     flat = env.withColumn("encryption_type", etype_col).withColumn(
         "initialization_vector", iv
     )
-    flat = flat.select(
-        *[
-            F.unix_micros(F.col(c)).alias(c) if c == "timestamp" else F.col(c)
-            for c in _PLAIN_FLAT_NAMES
-        ],
+    flat = _flat_frame(
+        flat,
+        _PLAIN_FLAT_NAMES,
         _prev_iv(F.col("initialization_vector")).alias("__prev_iv"),
         payload_json.cast("binary").alias("__payload_json"),
         prev_json.cast("binary").alias("__prev_json"),
     )
+    enc = compile_encoder(SECURE_ENVELOPE_SCHEMA)
 
-    def encode_batches(
-        batches: Iterator["pa.RecordBatch"],
-    ) -> Iterator["pa.RecordBatch"]:
-        enc = compile_encoder(SECURE_ENVELOPE_SCHEMA)
-        for batch in batches:
-            out = []
-            for row in batch.to_pylist():
-                etype = row["encryption_type"]
-                key = ring.get(etype)
-                if key is None:
-                    raise ValueError(
-                        f"no key in ring for encryption_type {etype!r}"
-                    )
-                miv = row["initialization_vector"]
-                pj, qj = row["__payload_json"], row["__prev_json"]
-                rec = {n: row[n] for n in _PLAIN_FLAT_NAMES}
-                rec["payload_ciphertext"] = (
-                    None if pj is None else _seal(key, pj, miv)
-                )
-                rec["previous_payload_ciphertext"] = (
-                    None if qj is None else _seal(key, qj, row["__prev_iv"])
-                )
-                rec["meta"] = _meta_for_row(row, meta_version=1)
-                buf = bytearray()
-                enc(rec, buf)
-                out.append(bytes(buf))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out, pa.binary())], ["value"]
-            )
+    def encode_row(row: dict, out: bytearray) -> None:
+        etype = row["encryption_type"]
+        key = ring.get(etype)
+        if key is None:
+            raise ValueError(f"no key in ring for encryption_type {etype!r}")
+        miv = row["initialization_vector"]
+        pj, qj = row["__payload_json"], row["__prev_json"]
+        row["payload_ciphertext"] = None if pj is None else _seal(key, pj, miv)
+        row["previous_payload_ciphertext"] = (
+            None if qj is None else _seal(key, qj, row["__prev_iv"])
+        )
+        row["meta"] = _meta_for_row(row, meta_version=1)
+        enc(row, out)
 
-    return flat.mapInArrow(encode_batches, "value binary")
-
-
-#: output schema of the fused decode+open kernel: exactly
-#: avro_to_secure_envelope's columns (so consumer-side expressions like
-#: cipher_ok read unchanged) plus the two decrypted JSON strings
-_OPENED_SPARK_SCHEMA = (
-    "schema_id int, cluster_name string, database_name string, "
-    "table_name string, message_type string, ts_us long, log_file string, "
-    "log_pos long, offset int, txn_order long, "
-    "encryption_type string, initialization_vector binary, "
-    "payload_ciphertext binary, previous_payload_ciphertext binary, "
-    "meta_ok boolean, payload_plain string, previous_payload_plain string"
-)
+    return _encode_map(flat, encode_row)
 
 
 def avro_open_secure_envelope(wire: DataFrame, config_or_ring) -> DataFrame:
     """Secure-envelope Avro bytes -> decoded columns WITH the payloads
-    decrypted, in ONE Python stage. Equivalent to
+    decrypted, in ONE Python stage: exactly avro_to_secure_envelope's
+    columns (so consumer-side expressions like cipher_ok read unchanged)
+    plus the two decrypted JSON strings. Equivalent to
     ``decrypt_envelope(avro_to_secure_envelope(wire), cfg)`` up to the
     JVM ``from_json`` restore — apply :func:`restore_opened_payloads`
     for the fully restored envelope. A tampered ciphertext still fails
@@ -187,79 +157,35 @@ def avro_open_secure_envelope(wire: DataFrame, config_or_ring) -> DataFrame:
     import pyarrow as pa
 
     ring = _resolve_ring(config_or_ring)
+    dec = compile_decoder(SECURE_ENVELOPE_SCHEMA)
 
-    arrow_fields = [
-        pa.field("schema_id", pa.int32()),
-        pa.field("cluster_name", pa.string()),
-        pa.field("database_name", pa.string()),
-        pa.field("table_name", pa.string()),
-        pa.field("message_type", pa.string()),
-        pa.field("ts_us", pa.int64()),
-        pa.field("log_file", pa.string()),
-        pa.field("log_pos", pa.int64()),
-        pa.field("offset", pa.int32()),
-        pa.field("txn_order", pa.int64()),
-        pa.field("encryption_type", pa.string()),
-        pa.field("initialization_vector", pa.binary()),
-        pa.field("payload_ciphertext", pa.binary()),
-        pa.field("previous_payload_ciphertext", pa.binary()),
-        pa.field("meta_ok", pa.bool_()),
+    def records(raw: bytes):
+        rec = _decode_frame(dec, raw)
+        etype = rec["encryption_type"]
+        key = ring.get(etype)
+        if key is None:
+            raise ValueError(f"no key in ring for encryption_type {etype!r}")
+        miv = rec["initialization_vector"]
+        ct, qt = rec["payload_ciphertext"], rec["previous_payload_ciphertext"]
+        # strict decode is safe by invariant: _seal only ever encrypts
+        # UTF-8 JSON the JVM rendered with to_json, so authenticated
+        # plaintext is always valid UTF-8 (the composed path's
+        # binary->string cast would silently replace invalid bytes;
+        # nothing can produce them here, and HMAC rejects foreign
+        # ciphertext before decode)
+        rec["payload_plain"] = (
+            None if ct is None else _open(key, ct, miv).decode("utf-8")
+        )
+        rec["previous_payload_plain"] = (
+            None if qt is None else _open(key, qt, _prev_iv_py(miv)).decode("utf-8")
+        )
+        return (rec,)
+
+    plain = [
         pa.field("payload_plain", pa.string()),
         pa.field("previous_payload_plain", pa.string()),
     ]
-    out_schema = pa.schema(arrow_fields)
-
-    def decode_batches(
-        batches: Iterator["pa.RecordBatch"],
-    ) -> Iterator["pa.RecordBatch"]:
-        dec = compile_decoder(SECURE_ENVELOPE_SCHEMA)
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in arrow_fields}
-            for raw in batch.column(0).to_pylist():
-                rec, end = dec(raw, 0)
-                if end != len(raw):
-                    raise ValueError("trailing bytes after avro record")
-                meta = rec.pop("meta")
-                cols["meta_ok"].append(
-                    len(meta) == 1
-                    and meta[0]["cluster_name"] == rec["cluster_name"]
-                    and meta[0]["log_file"] == (rec["log_file"] or "")
-                    and meta[0]["log_pos"] == int(rec["log_pos"] or 0)
-                )
-                cols["ts_us"].append(rec.pop("timestamp"))
-                etype = rec["encryption_type"]
-                key = ring.get(etype)
-                if key is None:
-                    raise ValueError(
-                        f"no key in ring for encryption_type {etype!r}"
-                    )
-                miv = rec["initialization_vector"]
-                ct, qt = (
-                    rec["payload_ciphertext"],
-                    rec["previous_payload_ciphertext"],
-                )
-                # strict decode is safe by invariant: _seal only ever
-                # encrypts UTF-8 JSON the JVM rendered with to_json, so
-                # authenticated plaintext is always valid UTF-8 (the
-                # composed path's binary->string cast would silently
-                # replace invalid bytes; nothing can produce them here,
-                # and HMAC rejects foreign ciphertext before decode)
-                cols["payload_plain"].append(
-                    None if ct is None else _open(key, ct, miv).decode("utf-8")
-                )
-                cols["previous_payload_plain"].append(
-                    None
-                    if qt is None
-                    else _open(key, qt, _prev_iv_py(miv)).decode("utf-8")
-                )
-                for k, v in rec.items():
-                    cols[k].append(v)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], f.type) for f in arrow_fields],
-                schema=out_schema,
-            )
-
-    return wire.mapInArrow(decode_batches, _OPENED_SPARK_SCHEMA)
+    return _decode_envelopes(wire, SECURE_ENVELOPE_SCHEMA, records, plain)
 
 
 def restore_opened_payloads(opened: DataFrame) -> DataFrame:

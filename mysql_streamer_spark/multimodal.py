@@ -84,9 +84,9 @@ _PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}
 
 @functools.lru_cache(maxsize=1)
 def pil_available() -> bool:
-    """Probe for Pillow (same guarded-import pattern as the spark-avro jar
-    probe): where it exists the decoder takes the C fast path; the pure
-    decoder below is the always-available fallback. Memoized: Python does
+    """Probe for Pillow (a guarded import): where it exists the decoder
+    takes the C fast path; the pure decoder below is the always-available
+    fallback. Memoized: Python does
     NOT cache failed imports, so an unmemoized probe would pay a full
     sys.path scan per decoded blob when Pillow is absent (the common
     case in this container)."""

@@ -66,10 +66,27 @@ def test_numeric_defaults_still_coerce():
 
 # --- v1 meta schema: log_pos beyond 2^31 must fail loudly -----------------
 
-def test_log_pos_beyond_int32_raises(spark):
-    from pyspark.sql import functions as F
-
+def _encode_to_avro(df, tmp_path):
     from mysql_streamer_spark.connectors.avro_wire import envelope_to_avro
+
+    envelope_to_avro(df).collect()
+
+
+def _write_avro_files(df, tmp_path):
+    from mysql_streamer_spark.connectors.avro_file import (
+        write_envelope_avro_files,
+    )
+
+    write_envelope_avro_files(df, str(tmp_path / "ocf"))
+
+
+@pytest.mark.parametrize(
+    "encode",
+    [_encode_to_avro, _write_avro_files],
+    ids=["envelope_to_avro", "write_envelope_avro_files"],
+)
+def test_log_pos_beyond_int32_raises(spark, tmp_path, encode):
+    from pyspark.sql import functions as F
 
     base = spark.range(1).select(
         F.lit(None).cast("int").alias("schema_id"),
@@ -88,7 +105,7 @@ def test_log_pos_beyond_int32_raises(spark):
         F.lit(None).cast("double").alias("previous_payload_val"),
     )
     with pytest.raises(Exception) as ei:
-        envelope_to_avro(base).collect()
+        encode(base, tmp_path)
     assert "32-bit int range" in str(ei.value)
 
 

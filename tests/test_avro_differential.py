@@ -18,7 +18,6 @@ import json
 import math
 import struct
 
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -239,35 +238,6 @@ def test_envelope_schema_encoding_matches_java(spark):
     assert bytes(out) == theirs
 
 
-# --- spark-avro JVM fast path (guarded) -----------------------------------
-
-def test_jvm_avro_guard_is_honest(spark):
-    """The fast-path guard must be a bool, cached per session, and
-    consistent with what actually loading the format does — environment-
-    agnostic (ADVICE r5: asserting a literal False here would fail
-    spuriously on any cluster that DOES ship the spark-avro jar)."""
-    from mysql_streamer_spark.connectors import avro_wire
-
-    first = avro_wire.jvm_avro_available(spark)
-    assert isinstance(first, bool)
-    assert first is avro_wire.jvm_avro_available(spark)  # cached
-    # the probe's verdict matches reality: an actual to_avro evaluation
-    # succeeds iff the guard said True
-    try:
-        from pyspark.sql import functions as F
-        from pyspark.sql.avro.functions import to_avro
-
-        spark.range(1).select(
-            to_avro(
-                F.struct(F.lit(1).alias("x")), avro_wire._JVM_AVRO_PROBE_SCHEMA
-            ).alias("v")
-        ).collect()
-        usable = True
-    except Exception:
-        usable = False
-    assert first is usable
-
-
 def test_kernel_path_taken_when_jvm_unavailable(spark, sf_dir):
     """With the guard False, envelope_to_avro must produce the Python
     kernel plan (mapInArrow), not a broken reference to to_avro."""
@@ -276,32 +246,6 @@ def test_kernel_path_taken_when_jvm_unavailable(spark, sf_dir):
 
     wire = envelope_to_avro(envelope_pipeline(spark, sf_dir))
     assert "MapInArrow" in wire._jdf.queryExecution().executedPlan().toString()
-
-
-def test_jvm_fast_path_parity_with_kernel(spark, sf_dir):
-    """Byte-parity of the spark-avro fast path against the Python kernel,
-    exercised wherever the spark-avro jar is actually loadable (skipped in
-    this container; the Java-differential properties above pin the kernel
-    to the same reference implementation spark-avro wraps)."""
-    from mysql_streamer_spark.connectors.avro_wire import jvm_avro_available
-
-    if not jvm_avro_available(spark):
-        pytest.skip("spark-avro datasource not on the JVM classpath")
-    from mysql_streamer_spark.cdc.pipeline import envelope_pipeline
-    from mysql_streamer_spark.connectors.avro_wire import (
-        avro_to_envelope,
-        envelope_to_avro,
-    )
-
-    env = envelope_pipeline(spark, sf_dir).orderBy("txn_order").limit(200).cache()
-    kernel = [r.value for r in envelope_to_avro(env, use_jvm=False).collect()]
-    jvm = [r.value for r in envelope_to_avro(env, use_jvm=True).collect()]
-    assert sorted(kernel) == sorted(jvm)
-    # and the JVM decoder reads kernel bytes (cross-decode, both ways)
-    wire = envelope_to_avro(env, use_jvm=False)
-    back = avro_to_envelope(wire, use_jvm=True)
-    assert back.filter(~back.meta_ok).count() == 0
-    env.unpersist()
 
 
 def test_v2_envelope_encoding_matches_java(spark):
