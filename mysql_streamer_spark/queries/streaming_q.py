@@ -371,19 +371,14 @@ def _streaming_incremental_agg_oracle() -> str:
 
 
 def q_streaming_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark 4 ``transformWithStateInPandas`` (the StatefulProcessor API):
-    a per-user profile maintained across TWO micro-batches (the source is
-    split in half, one file per trigger), so the second batch's emitted
-    profiles are provably state-merged with the first. The final view —
-    latest emitted row per user — must equal the batch aggregate over ALL
-    events, which is the oracle.
-
-    Where google.protobuf is absent (the transformWithState Python worker
-    hard-requires it and pyspark ships it only as a 'connect' extra) the
-    stream runs the semantically identical applyInPandasWithState fallback
-    (streaming/transform_state.py:profile_stream) — same state layout,
-    same emitted rows, same oracle; the StatefulProcessor path activates
-    automatically wherever protobuf exists."""
+    """A per-user profile maintained by ``applyInPandasWithState``
+    (streaming/transform_state.py:profile_stream) across TWO micro-batches
+    (the source is split in half, one file per trigger), so the second
+    batch's emitted profiles are provably state-merged with the first. The
+    final view — latest emitted row per user — must equal the batch
+    aggregate over ALL events, which is the oracle. The query keeps the
+    name of the API it was first written for (Spark 4's
+    transformWithState), which is no longer used."""
     import duckdb
 
     from mysql_streamer_spark.streaming.transform_state import run_profile_stream

@@ -32,11 +32,6 @@ class BatchMetric:
     #: delay is deliberately excluded (ADVICE r5: wall-clock now() in the
     #: callback inflated p99 with scheduling noise).
     commit_lag_s: float = 0.0
-    #: "progress" when commit_lag_s came from the progress report;
-    #: "wallclock" when durations were missing and the listener's own
-    #: observation time stood in (different semantics — includes listener
-    #: queue delay; summaries count these separately, never silently mix).
-    lag_source: str = "progress"
 
 
 def _percentile(sorted_vals: list[float], q: float) -> float:
@@ -62,25 +57,15 @@ class MetricsCollector:
     def alerts(self) -> list[BatchMetric]:
         return [b for b in self.batches if b.alert]
 
-    def lag_percentiles(self, non_empty_only: bool = True) -> dict[str, float]:
+    def lag_percentiles(self) -> dict[str, float]:
         """p50/p99/max commit lag across recorded batches (empty-input
-        trigger ticks excluded by default — they commit nothing).
-        Percentiles are computed over progress-derived lags only;
-        ``wallclock_batches`` counts the fallback-derived observations
-        that were EXCLUDED (different semantics — they include listener
-        queue delay and must not inflate the SLO numbers)."""
-        eligible = [
-            b for b in self.batches if b.num_input_rows > 0 or not non_empty_only
-        ]
-        lags = sorted(b.commit_lag_s for b in eligible if b.lag_source == "progress")
+        trigger ticks excluded — they commit nothing)."""
+        lags = sorted(b.commit_lag_s for b in self.batches if b.num_input_rows > 0)
         return {
             "p50_s": round(_percentile(lags, 0.50), 3),
             "p99_s": round(_percentile(lags, 0.99), 3),
             "max_s": round(lags[-1] if lags else 0.0, 3),
             "batches": len(lags),
-            "wallclock_batches": sum(
-                1 for b in eligible if b.lag_source != "progress"
-            ),
         }
 
 
@@ -95,36 +80,18 @@ class EnvelopeStreamListener(StreamingQueryListener):
         pass
 
     def onQueryProgress(self, event) -> None:  # noqa: N802
-        import datetime as _dt
-
         p = event.progress
-        duration = p.durationMs.get("triggerExecution")
-        if duration is not None:
-            # progress-reported: trigger start + triggerExecution IS the
-            # commit instant, so the lag is the engine's own duration —
-            # immune to how long this callback sat in the listener queue
-            lag, lag_source = duration / 1000.0, "progress"
-        else:  # pragma: no cover — engines always report triggerExecution
-            duration = 0
-            try:
-                # p.timestamp is the trigger's start instant (ISO-8601, UTC)
-                started = _dt.datetime.fromisoformat(
-                    p.timestamp.replace("Z", "+00:00")
-                ).timestamp()
-                lag = max(
-                    0.0, _dt.datetime.now(_dt.timezone.utc).timestamp() - started
-                )
-            except (ValueError, AttributeError):
-                lag = 0.0
-            lag_source = "wallclock"
+        duration = p.durationMs["triggerExecution"]
         self.collector.batches.append(
             BatchMetric(
                 batch_id=p.batchId,
                 num_input_rows=p.numInputRows,
                 duration_ms=duration,
                 alert=duration / 1000.0 > self.collector.max_batch_seconds,
-                commit_lag_s=lag,
-                lag_source=lag_source,
+                # trigger start + triggerExecution IS the commit instant, so
+                # the lag is the engine's own duration — immune to how long
+                # this callback sat in the listener queue
+                commit_lag_s=duration / 1000.0,
             )
         )
 

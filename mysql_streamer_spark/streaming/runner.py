@@ -27,7 +27,9 @@ Structured Streaming primitives:
 ``drain`` is that lifecycle (lock, checkpoint, trigger, terminate) and
 ``write_sink_batch`` that sink; every checkpointed stream in the package
 goes through them, and the few streams that cannot use ``drain`` say why
-where they start.
+where they start. ``drain_stateful`` is ``drain`` under the state-store
+policy (RocksDB provider, ``STATE_PARTITIONS``), the one place a stream
+with stateful operators gets it.
 
 Scale: the micro-batch plan is envelope_pipeline_df — stateless projections
 plus one broadcast join — so each batch parallelizes across the cluster
@@ -51,48 +53,28 @@ from mysql_streamer_spark.streaming.singleton import NamespaceLock
 #: keys, session windows, join buffers) on local disk with incremental
 #: checkpointing — at 100 TB/day the dedup/session state exceeds executor
 #: heap, where the default in-memory HDFS-backed provider OOMs. Bundled
-#: with Spark 4; set before a query's FIRST start (the provider is fixed
-#: per checkpoint lineage).
+#: with Spark 4; ``drain_stateful`` sets it for the query's start (the
+#: provider is fixed per checkpoint lineage).
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
 
-#: Default state-store partition count for the stateful streams here.
-#: A stateful operator materializes one RocksDB store instance PER shuffle
-#: partition PER micro-batch (open + commit + checkpoint upload each), and
-#: the count is frozen into the checkpoint at query creation — it is a
-#: per-deployment knob sized to the stream's key cardinality/throughput up
-#: front (the same knob run_interval_join_stream has always pinned), NOT
-#: the batch shuffle default. The fixtures here carry thousands of state
-#: keys, where 8 stores already hold O(hundreds) keys each; a 100 TB/day
-#: deployment sizes this to its key volume (e.g. thousands of partitions)
-#: when it creates the checkpoint. Locally, inheriting the batch default
-#: (=cores) meant 32 store open/commit cycles per micro-batch; measured
-#: on the windowed stream at sf0.1 (min-of-4, alternating in-session A/B):
-#: 32 partitions 2.97s vs 8 partitions 1.51s vs 4 partitions 1.37s, with
-#: identical emitted rows — the per-store fixed cost dominates tiny state.
+#: State-store partition count for every stateful stream here: the shuffle
+#: partitions ``drain_stateful`` pins while the query starts. A stateful
+#: operator materializes one RocksDB store instance PER shuffle partition
+#: PER micro-batch (open + commit + checkpoint upload each; a stream-stream
+#: join four), and the first start freezes the count into the checkpoint's
+#: offset log, so it is sized to the stream's key volume up front, not
+#: taken from the batch shuffle default. The fixtures here carry thousands
+#: of state keys, where 8 stores already hold O(hundreds) keys each; a
+#: 100 TB/day deployment sizes this to its key volume (e.g. thousands of
+#: partitions) before it creates the checkpoint. Locally, inheriting the
+#: batch default (=cores) meant 32 store open/commit cycles per micro-batch;
+#: measured on the windowed stream at sf0.1 (min-of-4, alternating in-session
+#: A/B): 32 partitions 2.97s vs 8 partitions 1.51s vs 4 partitions 1.37s,
+#: with identical emitted rows — the per-store fixed cost dominates tiny
+#: state.
 STATE_PARTITIONS = 8
-
-
-def use_rocksdb_state(spark: SparkSession) -> None:
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-
-
-class pinned_state_partitions:
-    """Pin spark.sql.shuffle.partitions while a streaming query STARTS
-    (the value is captured into the checkpoint then), restoring the batch
-    default afterwards — scoping the deployment knob to the stream."""
-
-    def __init__(self, spark: SparkSession, n: int = STATE_PARTITIONS) -> None:
-        self._spark = spark
-        self._n = n
-
-    def __enter__(self) -> None:
-        self._prev = self._spark.conf.get("spark.sql.shuffle.partitions")
-        self._spark.conf.set("spark.sql.shuffle.partitions", str(self._n))
-
-    def __exit__(self, *exc: object) -> None:
-        self._spark.conf.set("spark.sql.shuffle.partitions", self._prev)
 
 
 def load_events_stream(
@@ -131,6 +113,27 @@ def drain(writer: DataStreamWriter, checkpoint_dir: str) -> None:
         writer.option("checkpointLocation", checkpoint_dir).trigger(
             availableNow=True
         ).start().awaitTermination()
+
+
+def drain_stateful(
+    spark: SparkSession, writer: DataStreamWriter, checkpoint_dir: str
+) -> None:
+    """``drain`` for a stream with stateful operators: the query starts on
+    the RocksDB state store with ``STATE_PARTITIONS`` shuffle partitions,
+    and the session gets its own two values back on any exit (the
+    stateless drains keep the session's). The first start freezes both
+    into the checkpoint's offset log and a restart reads them from there,
+    so putting the session's values back never changes a stream."""
+    conf = spark.conf
+    provider = conf.get("spark.sql.streaming.stateStore.providerClass")
+    partitions = conf.get("spark.sql.shuffle.partitions")
+    try:
+        conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
+        conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
+        drain(writer, checkpoint_dir)
+    finally:
+        conf.set("spark.sql.streaming.stateStore.providerClass", provider)
+        conf.set("spark.sql.shuffle.partitions", partitions)
 
 
 def write_sink_batch(df: DataFrame, out_dir: str, batch_id: int) -> None:
@@ -219,7 +222,6 @@ def run_dedup_stream(
     checkpoint_dir: str,
     watermark: str = "36500 days",
     max_files_per_trigger: int = 1,
-    state_partitions: int = STATE_PARTITIONS,
 ) -> None:
     """Streaming duplicate suppression across micro-batches (T6's data-plane
     form): ``dropDuplicatesWithinWatermark`` keys the state store on
@@ -232,20 +234,19 @@ def run_dedup_stream(
     O(events/horizon). Tests use an effectively-infinite delay so the
     assertion is exact.
     """
-    use_rocksdb_state(spark)
     events = load_events_stream(spark, source_dir, max_files_per_trigger)
     deduped = (
         events.withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "ts", "user_id", "event_type")
     )
-    with pinned_state_partitions(spark, state_partitions):
-        drain(
-            deduped.writeStream.format("parquet")
-            .option("path", out_dir)
-            .outputMode("append"),
-            checkpoint_dir,
-        )
+    drain_stateful(
+        spark,
+        deduped.writeStream.format("parquet")
+        .option("path", out_dir)
+        .outputMode("append"),
+        checkpoint_dir,
+    )
 
 
 def windowed_counts_df(
@@ -274,7 +275,6 @@ def run_windowed_stream(
     window: str = "1 hour",
     watermark: str = "1 hour",
     max_files_per_trigger: int = 1,
-    state_partitions: int = STATE_PARTITIONS,
 ) -> None:
     """Watermarked tumbling-window aggregation to an append-mode parquet
     sink — the late-data-handling surface (SURVEY §2.8).
@@ -286,16 +286,15 @@ def run_windowed_stream(
     finalizes. Windows still open when the stream drains are withheld —
     exactly-once rather than maybe-updated-later.
     """
-    use_rocksdb_state(spark)
     events = load_events_stream(spark, source_dir, max_files_per_trigger)
     agg = windowed_counts_df(events, window=window, watermark=watermark)
-    with pinned_state_partitions(spark, state_partitions):
-        drain(
-            agg.writeStream.format("parquet")
-            .option("path", out_dir)
-            .outputMode("append"),
-            checkpoint_dir,
-        )
+    drain_stateful(
+        spark,
+        agg.writeStream.format("parquet")
+        .option("path", out_dir)
+        .outputMode("append"),
+        checkpoint_dir,
+    )
 
 
 def run_session_window_stream(
@@ -306,14 +305,12 @@ def run_session_window_stream(
     gap: str = "30 minutes",
     watermark: str = "1 hour",
     max_files_per_trigger: int = 32,
-    state_partitions: int = STATE_PARTITIONS,
 ) -> None:
     """Watermarked SESSION-window aggregation to an append-mode sink — the
     native merging-session operator under streaming state. A session emits
     only once the watermark passes its end (last event + gap), so emitted
     sessions are final even with out-of-order events inside the delay;
     sessions still open when the stream drains stay in state, withheld."""
-    use_rocksdb_state(spark)
     events = load_events_stream(spark, source_dir, max_files_per_trigger)
     agg = (
         events.withWatermark("ts", watermark)
@@ -326,13 +323,13 @@ def run_session_window_stream(
             "n_events",
         )
     )
-    with pinned_state_partitions(spark, state_partitions):
-        drain(
-            agg.writeStream.format("parquet")
-            .option("path", out_dir)
-            .outputMode("append"),
-            checkpoint_dir,
-        )
+    drain_stateful(
+        spark,
+        agg.writeStream.format("parquet")
+        .option("path", out_dir)
+        .outputMode("append"),
+        checkpoint_dir,
+    )
 
 
 def run_interval_join_stream(
@@ -342,17 +339,9 @@ def run_interval_join_stream(
     checkpoint_dir: str,
     lookback: str = "30 minutes",
     watermark: str = "1 hour",
-    state_partitions: int = 8,
 ) -> None:
     """Stream-stream interval join: purchases matched to the same user's
     clicks in the trailing ``lookback`` window, append-mode to parquet.
-
-    ``state_partitions`` pins spark.sql.shuffle.partitions for this query:
-    a stream-stream join materializes FOUR state stores per shuffle
-    partition, and the count is frozen into the checkpoint at creation —
-    it must be sized to the stream's key cardinality/throughput up front
-    (a real deployment knob, not the batch shuffle default). The batch
-    default is restored after the drain.
 
     Both sides carry a watermark and the join predicate bounds event time
     on BOTH ends, so the state store evicts a click once the purchase-side
@@ -365,7 +354,6 @@ def run_interval_join_stream(
     can never be retracted), so replay + the file sink's transactional
     commit log keeps the output exactly-once.
     """
-    use_rocksdb_state(spark)
     purchases = (
         load_events_stream(spark, source_dir, max_files_per_trigger=1)
         .filter(F.col("event_type") == "purchase")
@@ -398,13 +386,13 @@ def run_interval_join_stream(
         "click_id",
         (F.unix_micros("p_ts") - F.unix_micros("c_ts")).alias("gap_us"),
     )
-    with pinned_state_partitions(spark, state_partitions):
-        drain(
-            joined.writeStream.format("parquet")
-            .option("path", out_dir)
-            .outputMode("append"),
-            checkpoint_dir,
-        )
+    drain_stateful(
+        spark,
+        joined.writeStream.format("parquet")
+        .option("path", out_dir)
+        .outputMode("append"),
+        checkpoint_dir,
+    )
 
 
 def run_upsert_stream(

@@ -87,23 +87,18 @@ def sessionize_stream(events: DataFrame) -> DataFrame:
 def run_session_stream(
     spark, source_dir: str, out_dir: str, checkpoint_dir: str,
     max_files_per_trigger: int = 1,
-    state_partitions: int | None = None,
 ) -> None:
     from mysql_streamer_spark.streaming.runner import (
-        STATE_PARTITIONS,
-        drain,
+        drain_stateful,
         load_events_stream,
-        pinned_state_partitions,
-        use_rocksdb_state,
     )
 
-    use_rocksdb_state(spark)
     events = load_events_stream(spark, source_dir, max_files_per_trigger)
-    with pinned_state_partitions(spark, state_partitions or STATE_PARTITIONS):
-        drain(
-            sessionize_stream(events)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .outputMode("append"),
-            checkpoint_dir,
-        )
+    drain_stateful(
+        spark,
+        sessionize_stream(events)
+        .writeStream.format("parquet")
+        .option("path", out_dir)
+        .outputMode("append"),
+        checkpoint_dir,
+    )

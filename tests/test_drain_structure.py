@@ -1,6 +1,8 @@
 """Structure guard for the streaming plane: every checkpointed stream starts
-through ``runner.drain`` (lock, checkpoint, availableNow, terminate), and
-the ``batch_id=N`` sink layout is spelled only in ``streaming/runner.py``."""
+through ``runner.drain`` (lock, checkpoint, availableNow, terminate), the
+``batch_id=N`` sink layout is spelled only in ``streaming/runner.py``, and
+only ``runner.drain_stateful`` sets the state-store policy (provider and
+shuffle partitions)."""
 
 from __future__ import annotations
 
@@ -19,6 +21,12 @@ STREAM_STARTS = {
         "the simple reader serves one batch under availableNow"
     ),
     "connectors/sinks.py::write_kafka": "returns a live, continuous query",
+}
+
+#: the session settings a checkpoint freezes for its stateful operators
+STATE_POLICY_KEYS = {
+    "spark.sql.streaming.stateStore.providerClass",
+    "spark.sql.shuffle.partitions",
 }
 
 #: DataStreamWriter calls that mark a function's ``.start()`` as a stream's
@@ -79,3 +87,27 @@ def test_batch_id_layout_only_in_runner():
     found = _batch_dir_literals()
     assert found.pop("streaming/runner.py", 0) >= 1  # the scan sees the layout
     assert found == {}
+
+
+def _state_policy_setters() -> set[str]:
+    """Functions with a ``.set(<state policy key>, ...)`` call of their own."""
+    found = set()
+    for rel, tree in _modules():
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for n in _own_nodes(fn):
+                if (
+                    isinstance(n, ast.Call)
+                    and isinstance(n.func, ast.Attribute)
+                    and n.func.attr == "set"
+                    and n.args
+                    and isinstance(n.args[0], ast.Constant)
+                    and n.args[0].value in STATE_POLICY_KEYS
+                ):
+                    found.add(f"{rel}::{fn.name}")
+    return found
+
+
+def test_state_policy_set_only_in_the_stateful_drain():
+    assert _state_policy_setters() == {"streaming/runner.py::drain_stateful"}

@@ -101,9 +101,8 @@ def test_local_supplier_revenue_matches_sql(spark):
 
 
 def test_transform_with_state_profiles(spark):
-    """Runs on every environment: the query picks the StatefulProcessor
-    path where google.protobuf exists and the semantically identical
-    applyInPandasWithState fallback otherwise (transform_state.py)."""
+    """The profile stream's latest row per user agrees with the batch
+    event count (applyInPandasWithState, transform_state.py)."""
     from mysql_streamer_spark.queries.streaming_q import (
         q_streaming_transform_with_state,
     )

@@ -312,3 +312,51 @@ def test_profile_stream_replay_does_not_duplicate_its_batch(spark, sf_dir, tmp_p
     rows = spark.read.parquet(out)
     assert rows.filter(rows.batch_id == last).count() > 0
     assert rows.groupBy("user_id", "batch_id").count().filter("count > 1").count() == 0
+
+
+_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
+_PARTITIONS_KEY = "spark.sql.shuffle.partitions"
+
+
+@pytest.fixture()
+def hdfs_state_session(spark):
+    """The session on Spark's default HDFS-backed state store and a shuffle
+    partition count other than the stateful drain's (the session fixture
+    is shared, so an earlier test may have switched either); both are put
+    back afterwards."""
+    prev = {k: spark.conf.get(k) for k in (_PROVIDER_KEY, _PARTITIONS_KEY)}
+    spark.conf.set(
+        _PROVIDER_KEY,
+        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
+    )
+    spark.conf.set(_PARTITIONS_KEY, "5")
+    yield
+    for k, v in prev.items():
+        spark.conf.set(k, v)
+
+
+def test_stateful_drain_freezes_its_policy_and_restores_the_session(
+    spark, sf_dir, hdfs_state_session, tmp_path
+):
+    """A stateful stream's checkpoint records the RocksDB provider and the
+    stateful partition count, and the session keeps its own values."""
+    import json
+
+    from mysql_streamer_spark.streaming.runner import (
+        ROCKSDB_PROVIDER,
+        STATE_PARTITIONS,
+        run_windowed_stream,
+    )
+    from mysql_streamer_spark.tables import load_table
+
+    before = {k: spark.conf.get(k) for k in (_PROVIDER_KEY, _PARTITIONS_KEY)}
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    load_table(spark, sf_dir, "events").repartition(2).write.parquet(src)
+
+    run_windowed_stream(spark, src, out, ckpt)
+
+    with open(f"{ckpt}/offsets/0") as fh:
+        (meta,) = [json.loads(line) for line in fh if '"conf"' in line]
+    assert meta["conf"][_PROVIDER_KEY] == ROCKSDB_PROVIDER
+    assert meta["conf"][_PARTITIONS_KEY] == str(STATE_PARTITIONS) == "8"
+    assert {k: spark.conf.get(k) for k in before} == before
