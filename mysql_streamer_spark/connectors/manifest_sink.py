@@ -25,32 +25,14 @@ import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceArrowWriter,
+    DataSourceStreamArrowWriter,
+    WriterCommitMessage,
+)
 
 from mysql_streamer_spark.storage import atomic_write_json, read_json
-
-try:
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceArrowWriter,
-        DataSourceStreamArrowWriter,
-        WriterCommitMessage,
-    )
-
-    HAS_PYTHON_DATASOURCE = True
-except ImportError:  # pragma: no cover - older runtimes
-    HAS_PYTHON_DATASOURCE = False
-
-    class DataSource:  # type: ignore[no-redef]
-        pass
-
-    class DataSourceArrowWriter:  # type: ignore[no-redef]
-        pass
-
-    class DataSourceStreamArrowWriter:  # type: ignore[no-redef]
-        pass
-
-    class WriterCommitMessage:  # type: ignore[no-redef]
-        pass
 
 
 MANIFEST_NAME = "_MANIFEST.json"
@@ -224,8 +206,6 @@ _REGISTERED: set[str] = set()
 
 
 def register_manifest_sink(spark: SparkSession) -> None:
-    if not HAS_PYTHON_DATASOURCE:  # pragma: no cover
-        raise RuntimeError("pyspark.sql.datasource requires Spark >= 4")
     app_id = spark.sparkContext.applicationId
     if app_id in _REGISTERED:
         return

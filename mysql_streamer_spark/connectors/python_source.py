@@ -27,42 +27,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-try:  # the DataSource API needs pyspark >= 4
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceReader,
-        DataSourceStreamReader,
-        DataSourceWriter,
-        InputPartition,
-        SimpleDataSourceStreamReader,
-        WriterCommitMessage,
-    )
-
-    HAS_PYTHON_DATASOURCE = True
-except ImportError:  # pragma: no cover - older runtimes
-    HAS_PYTHON_DATASOURCE = False
-
-    class DataSource:  # type: ignore[no-redef]
-        pass
-
-    class DataSourceReader:  # type: ignore[no-redef]
-        pass
-
-    class DataSourceStreamReader:  # type: ignore[no-redef]
-        pass
-
-    class DataSourceWriter:  # type: ignore[no-redef]
-        pass
-
-    class InputPartition:  # type: ignore[no-redef]
-        pass
-
-    class SimpleDataSourceStreamReader:  # type: ignore[no-redef]
-        pass
-
-    class WriterCommitMessage:  # type: ignore[no-redef]
-        pass
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceReader,
+    DataSourceStreamReader,
+    DataSourceWriter,
+    InputPartition,
+    SimpleDataSourceStreamReader,
+    WriterCommitMessage,
+)
 
 
 #: Output schema of the source. ``ts_us`` is epoch microseconds (int64):
@@ -546,7 +519,11 @@ class ManifestJsonlWriter(DataSourceWriter):
     def commit(self, messages) -> None:
         import os
 
-        from mysql_streamer_spark.storage import atomic_write_json, read_json
+        from mysql_streamer_spark.storage import (
+            atomic_write_json,
+            fsync_dir,
+            read_json,
+        )
 
         manifest_path = os.path.join(self.path, "_MANIFEST.json")
         prior: list[dict] = []
@@ -561,6 +538,8 @@ class ManifestJsonlWriter(DataSourceWriter):
             final = os.path.join(self.path, os.path.basename(m.staged))
             os.replace(m.staged, final)
             new.append({"file": os.path.basename(final), "rows": m.rows})
+        # the renamed shards are durable before the manifest names them
+        fsync_dir(self.path)
         shards = sorted(prior + new, key=lambda s: s["file"])
         manifest = {
             "shards": shards,
@@ -614,8 +593,6 @@ class ManifestJsonlWriter(DataSourceWriter):
 
 
 def register_binlog_source(spark: SparkSession) -> None:
-    if not HAS_PYTHON_DATASOURCE:  # pragma: no cover
-        raise RuntimeError("pyspark.sql.datasource requires Spark >= 4")
     app_id = spark.sparkContext.applicationId
     if app_id in _REGISTERED:
         return

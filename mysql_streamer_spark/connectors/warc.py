@@ -31,6 +31,13 @@ part of the training-data-pipeline extension (SURVEY.md §7 phases 4-5).
 
 from __future__ import annotations
 
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceReader,
+    DataSourceStreamReader,
+    InputPartition,
+)
+
 CRLF = b"\r\n"
 WARC_VERSION = b"WARC/1.0"
 
@@ -259,31 +266,6 @@ def warc_read_files(spark, path: str, types: tuple[str, ...] | None = None):
 # Pluggable streaming source: a crawl-drop directory of WARC files
 # ---------------------------------------------------------------------------
 
-try:  # Spark >= 4 Python Data Source API (same guard as python_source.py)
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceReader,
-        DataSourceStreamReader,
-        InputPartition,
-    )
-
-    HAS_PYTHON_DATASOURCE = True
-except ImportError:  # pragma: no cover - Spark < 4
-    HAS_PYTHON_DATASOURCE = False
-
-    class DataSource:  # type: ignore[no-redef]
-        pass
-
-    class DataSourceReader:  # type: ignore[no-redef]
-        pass
-
-    class DataSourceStreamReader:  # type: ignore[no-redef]
-        pass
-
-    class InputPartition:  # type: ignore[no-redef]
-        pass
-
-
 _WARC_SOURCE_SCHEMA = (
     "record_id string, target_uri string, content_type string, "
     "payload binary, record_len long"
@@ -441,8 +423,6 @@ _WARC_REGISTERED: set[str] = set()
 
 
 def register_warc_source(spark) -> None:
-    if not HAS_PYTHON_DATASOURCE:  # pragma: no cover
-        raise RuntimeError("pyspark.sql.datasource requires Spark >= 4")
     app_id = spark.sparkContext.applicationId
     if app_id in _WARC_REGISTERED:
         return

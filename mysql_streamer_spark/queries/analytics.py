@@ -2773,19 +2773,7 @@ def q_analytics_copurchase_pagerank(
     shuffles only (node, contribution) pairs on dst — the canonical
     Pregel-on-DataFrames plan (GraphX/GraphFrames compile to exactly
     this). The rank vector is node-cardinality, never wider; top-K is
-    TakeOrdered. 5 iterations = 5 shuffles, independent of corpus size.
-
-    Below GRAPH_FOLD_MAX_LI_ROWS the identical integer recurrence runs
-    as a driver-side numpy fold (graphfold.py — the _driver_union_find
-    discipline): the distributed loop's 5 scheduled shuffle rounds are
-    pure overhead when the whole graph provably fits the driver."""
-    from mysql_streamer_spark import graphfold
-
-    folded = graphfold.pagerank_fold(
-        spark, sf_dir, scale=PR_SCALE, iters=PR_ITERS, top_k=PR_TOP_K
-    )
-    if folded is not None:
-        return folded
+    TakeOrdered. 5 iterations = 5 shuffles, independent of corpus size."""
     edges = _copurchase_edges(spark, sf_dir, directed=True)
     deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     nodes = deg.select(F.col("src").alias("part"), "deg").persist()
@@ -3162,18 +3150,7 @@ def q_analytics_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     ever returning an unconverged superset. The DuckDB oracle unrolls
     KCORE_ROUNDS CTE rounds; running past the fixpoint is idempotent, so
     both sides agree wherever the oracle's unroll covers convergence
-    (test-asserted on the fixture with a round to spare).
-
-    Below GRAPH_FOLD_MAX_LI_ROWS the identical peel runs as a
-    driver-side numpy fold (graphfold.py): per-round scheduled
-    join+aggregate jobs are pure overhead on a driver-sized graph."""
-    from mysql_streamer_spark import graphfold
-
-    folded = graphfold.kcore_fold(
-        spark, sf_dir, k=KCORE_K, max_rounds=KCORE_MAX_ROUNDS
-    )
-    if folded is not None:
-        return folded
+    (test-asserted on the fixture with a round to spare)."""
     und = _copurchase_edges(spark, sf_dir, directed=False)
     deg = (
         und.select(F.explode(F.array("u", "v")).alias("n"))
@@ -3283,15 +3260,7 @@ def q_analytics_degree_distribution(
     only (never over nodes). Output cardinality is fixed (<=64 rows) at
     ANY graph size — the defining property of a scale-safe report.
     Reference scope note: no analytics surface in the CDC reference —
-    SURVEY.md §7 phase-4/5 graph extension.
-
-    Below GRAPH_FOLD_MAX_LI_ROWS the identical report computes as a
-    driver-side numpy fold (graphfold.py)."""
-    from mysql_streamer_spark import graphfold
-
-    folded = graphfold.degree_distribution_fold(spark, sf_dir)
-    if folded is not None:
-        return folded
+    SURVEY.md §7 phase-4/5 graph extension."""
     und = _copurchase_edges(spark, sf_dir, directed=False)
     deg = (
         und.select(F.explode(F.array("u", "v")).alias("n"))
@@ -3405,17 +3374,7 @@ def q_analytics_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension per endpoint (broadcast while it fits, AQE otherwise),
     then ONE scalar map-side aggregate. Output is one row at any size.
     Reference scope note: no analytics surface in the CDC reference —
-    SURVEY.md §7 phase-4/5 graph extension.
-
-    Below GRAPH_FOLD_MAX_LI_ROWS the identical moment sums compute as a
-    driver-side numpy fold (graphfold.py)."""
-    from mysql_streamer_spark import graphfold
-
-    folded = graphfold.assortativity_fold(
-        spark, sf_dir, neutral=ASSORT_NEUTRAL
-    )
-    if folded is not None:
-        return folded
+    SURVEY.md §7 phase-4/5 graph extension."""
     und = _copurchase_edges(spark, sf_dir, directed=False)
     deg = (
         und.select(F.explode(F.array("u", "v")).alias("n"))
@@ -3437,8 +3396,10 @@ def q_analytics_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     sjk = F.col("s_jk").cast("double")
     ssum = F.col("s_sum").cast("double")
     ssq = F.col("s_sq").cast("double")
-    r = (F.lit(4.0) * m * sjk - ssum * ssum) / (
-        F.lit(2.0) * m * ssq - ssum * ssum
+    # a degree-regular graph zeroes the denominator: r is then NULL and
+    # the band neutral, which is what the DuckDB oracle's division gives
+    r = F.try_divide(
+        F.lit(4.0) * m * sjk - ssum * ssum, F.lit(2.0) * m * ssq - ssum * ssum
     )
     return agg.select(
         "m_edges",
@@ -3523,16 +3484,7 @@ def q_analytics_community_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     -label)) — a map-side-combinable aggregate, no window over nodes.
     Community rollup at the end is one more map-side aggregate.
     Reference scope note: no analytics surface in the CDC reference —
-    SURVEY.md §7 phase-4/5 graph extension.
-
-    Below GRAPH_FOLD_MAX_LI_ROWS the identical synchronous rounds run as
-    a driver-side numpy fold (graphfold.py): the per-round vote shuffle
-    is pure scheduling overhead on a driver-sized graph."""
-    from mysql_streamer_spark import graphfold
-
-    folded = graphfold.lpa_fold(spark, sf_dir, rounds=LPA_ROUNDS)
-    if folded is not None:
-        return folded
+    SURVEY.md §7 phase-4/5 graph extension."""
     # the PERSISTED directed frame (both orientations) — shared with
     # PageRank, so in a bench session the edge build is already warm and
     # each LPA round scans cache instead of re-deriving the union

@@ -22,8 +22,10 @@ def atomic_write_json(path: str, obj) -> None:
     hidden temp file in the same directory, flushed and fsynced, then
     ``os.replace``d over the target, so readers see the old document or the
     new one, never a torn or (after a power loss) empty one (object stores
-    would use a conditional PUT). The package's one commit protocol for
-    driver-side state and manifests."""
+    would use a conditional PUT); the directory is fsynced after the
+    rename, so the new document survives a power loss once this returns.
+    The package's one commit protocol for driver-side state and
+    manifests."""
     head, name = os.path.split(path)
     tmp = os.path.join(head, f".{name}.{uuid.uuid4().hex}.tmp")
     try:
@@ -35,6 +37,17 @@ def atomic_write_json(path: str, obj) -> None:
     finally:
         if os.path.exists(tmp):  # the write or the rename failed
             os.remove(tmp)
+    fsync_dir(head)
+
+
+def fsync_dir(path: str) -> None:
+    """Make the entries of directory ``path`` durable: a rename into it is
+    lost on a power loss until the directory itself is fsynced."""
+    fd = os.open(path or ".", os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
 
 
 def read_json(path: str):

@@ -305,7 +305,8 @@ def test_vacuum_after_tighter_vacuum_skips_missing_manifests(
 
 
 def _record_fsyncs(monkeypatch) -> set[int]:
-    """Inodes of every file ``os.fsync`` is called on from now on."""
+    """Inodes of every file or directory ``os.fsync`` is called on from
+    now on."""
     synced: set[int] = set()
     real = os.fsync
 
@@ -341,3 +342,40 @@ def test_manifest_part_is_fsynced_before_its_commit_message(tmp_path, monkeypatc
     msg = writer.write(iter(pa.table({"a": [1, 2]}).to_batches()))
     assert msg.n_rows == 2
     assert os.stat(os.path.join(tmp_path, msg.filename)).st_ino in synced
+
+
+def test_atomic_write_json_fsyncs_the_directory_after_the_rename(
+    tmp_path, monkeypatch
+):
+    """The rename that publishes a document is durable once the commit
+    returns: the target's directory is fsynced."""
+    from mysql_streamer_spark.storage import atomic_write_json, read_json
+
+    synced = _record_fsyncs(monkeypatch)
+    atomic_write_json(str(tmp_path / "state.json"), {"batch": 1})
+    assert read_json(str(tmp_path / "state.json")) == {"batch": 1}
+    assert os.stat(tmp_path).st_ino in synced
+
+
+def test_jsonl_shard_renames_are_durable_before_the_manifest(tmp_path, monkeypatch):
+    """commit() renames shards out of _staging/ into the table directory;
+    that directory is fsynced before the manifest naming them commits."""
+    from pyspark.sql import Row
+
+    from mysql_streamer_spark import storage
+    from mysql_streamer_spark.connectors.python_source import ManifestJsonlWriter
+
+    synced = _record_fsyncs(monkeypatch)
+    writer = ManifestJsonlWriter({"path": str(tmp_path)}, None, overwrite=True)
+    msg = writer.write(iter([Row(a=1)]))
+    table_dir_synced_at_manifest = []
+    real = storage.atomic_write_json
+
+    def commit_manifest(path, obj):
+        table_dir_synced_at_manifest.append(os.stat(tmp_path).st_ino in synced)
+        real(path, obj)
+
+    monkeypatch.setattr(storage, "atomic_write_json", commit_manifest)
+    writer.commit([msg])
+    assert table_dir_synced_at_manifest == [True]
+    assert storage.read_json(str(tmp_path / "_MANIFEST.json"))["total_rows"] == 1

@@ -479,3 +479,33 @@ def test_phash_clusters_partition_the_pair_graph(spark, sf_dir):
     for r in rows:
         assert r.cluster_size == len(got[r.keeper])
         assert r.keeper == min(got[r.keeper])
+
+
+def test_assortativity_degree_regular_graph_matches_oracle(spark, tmp_path):
+    """Three disjoint two-item baskets make a degree-regular graph, so the
+    closed form's denominator is exactly zero: Spark must return the
+    oracle's row (NULL r, band neutral) rather than raise."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mysql_streamer_spark.queries import analytics as A
+
+    li = tmp_path / "lineitem.parquet"
+    pq.write_table(
+        pa.table(
+            {
+                "l_orderkey": pa.array([1, 1, 2, 2, 3, 3], pa.int64()),
+                "l_partkey": pa.array([10, 11, 12, 13, 14, 15], pa.int64()),
+            }
+        ),
+        li,
+    )
+    got = [
+        tuple(r) for r in A.q_analytics_assortativity(spark, str(tmp_path)).collect()
+    ]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW lineitem AS SELECT * FROM read_parquet('{li}')")
+    want = con.execute(A._ASSORTATIVITY_ORACLE).fetchall()
+    A.release_copurchase_edges()
+    assert got == want == [(3, 3, 6, 6, None, "neutral")]

@@ -20,8 +20,9 @@ from __future__ import annotations
 import json
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 

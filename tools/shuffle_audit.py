@@ -27,8 +27,9 @@ import json
 import sys
 import time
 import urllib.request
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def _stages(base: str) -> list[dict]:

@@ -19,8 +19,9 @@ import json
 import sys
 import tempfile
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def run_once(spark, sf_dir: str, n_batches: int) -> tuple[float, int]:

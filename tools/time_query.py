@@ -13,8 +13,9 @@ from __future__ import annotations
 import argparse
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def main() -> int:
