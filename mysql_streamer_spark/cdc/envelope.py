@@ -22,7 +22,7 @@ driver-side dict.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mysql_streamer_spark.cdc.source import REFRESH_SUFFIX
@@ -74,17 +74,6 @@ def with_transaction_id(df: DataFrame, cluster_name: str = "refresh_primary") ->
             ).cast("long"),
         )
     )
-
-
-def schema_id_dimension(df: DataFrame) -> DataFrame:
-    """FALLBACK ONLY: positional schema ids discovered from the stream, for
-    sources with no registry. The default data path uses the SchemaRegistry
-    dimension (registry_schema_dimension) — positional dense-rank ids change
-    whenever a table appears/disappears, which is not the reference's
-    stable-schema-id semantics (schema_wrapper.py:97-141)."""
-    dim = df.select("database", "table").distinct()
-    w = Window.orderBy("database", "table")
-    return dim.withColumn("schema_id", F.dense_rank().over(w))
 
 
 def registry_schema_dimension(spark) -> DataFrame:

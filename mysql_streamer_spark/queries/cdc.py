@@ -29,6 +29,7 @@ from mysql_streamer_spark.cdc.source import (
 )
 from mysql_streamer_spark.queries.registry import QuerySpec
 from mysql_streamer_spark.schema.bootstrap import schemas_values_sql
+from mysql_streamer_spark.storage import scratch_dir
 
 #: Generated from the same constant the Spark filter uses (F1 lock-step).
 _BLACKLIST_SQL = "(" + ",".join(f"'{db}'" for db in DEFAULT_SCHEMA_BLACKLIST) + ")"
@@ -1675,14 +1676,12 @@ def q_cdc_avro_file_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cdc_avro_roundtrip), union metas (cdc_avro_gtid_roundtrip), and the
     container framing + codec here. Staging dir is per-call temp, like
     the streaming queries'."""
-    import tempfile
-
     from mysql_streamer_spark.connectors.avro_file import (
         read_envelope_avro_files,
         write_envelope_avro_files,
     )
 
-    work = tempfile.mkdtemp(prefix="mss_ocf_")
+    work = scratch_dir("mss_ocf_")
     # the OCF sink writes one file per input partition with the deflate
     # codec running INSIDE the write task — on the single-split fixture
     # feed that serialized the whole encode+compress on one core (3.4s of

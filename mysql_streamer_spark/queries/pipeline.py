@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from mysql_streamer_spark import text as tx
 from mysql_streamer_spark import text_kernels as tk
 from mysql_streamer_spark.queries.registry import QuerySpec
+from mysql_streamer_spark.storage import scratch_dir
 from mysql_streamer_spark.tables import load_table, spread
 
 #: Every doc_id ≡ 0 (mod EVAL_MODULUS) plays the role of a held-out
@@ -3476,10 +3477,6 @@ def q_pipeline_warc_file_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallelism grain of crawl ingest); projection + sha are codegen'd.
     No shuffle beyond the write side's spread() fan-out (the single-split
     local fixture's stand-in for cluster input parallelism)."""
-    import atexit
-    import shutil
-    import tempfile
-
     from mysql_streamer_spark.connectors.warc import (
         warc_read_files,
         warc_write_files,
@@ -3491,8 +3488,7 @@ def q_pipeline_warc_file_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "source", "text")
         .filter(F.length("text") > 0)
     )
-    work = tempfile.mkdtemp(prefix="mss_warc_")
-    atexit.register(shutil.rmtree, work, True)
+    work = scratch_dir("mss_warc_")
     warc_write_files(docs, work, WARC_DATE)
     recs = warc_read_files(spark, work, types=("response",))
     return recs.select(

@@ -8,7 +8,6 @@ must produce byte-identical messages to the batch plan.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -20,6 +19,7 @@ from mysql_streamer_spark.queries.cdc import (
     _SECURE_WIRE_ORACLE,
 )
 from mysql_streamer_spark.queries.registry import QuerySpec
+from mysql_streamer_spark.storage import scratch_dir
 from mysql_streamer_spark.streaming import read_sink, run_envelope_stream
 from mysql_streamer_spark.streaming.runner import (
     drain,
@@ -48,7 +48,7 @@ def _link_table(sf_dir: str, dst_dir: str, alias: str) -> None:
 
 def _staged_source(sf_dir: str) -> str:
     """The file stream source wants a directory; link the table in."""
-    work = tempfile.mkdtemp(prefix="mss_stream_")
+    work = scratch_dir("mss_stream_")
     src = f"{work}/src"
     os.makedirs(src)
     _link_table(sf_dir, src, "events")
@@ -71,8 +71,6 @@ def q_streaming_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     envelope — the streaming half of the custom-source equivalence that
     ``cdc_python_source_envelope`` proves for batch. (Reference S1 as a
     live source, low_level_binlog_stream_reader_wrapper.py:143-161.)"""
-    import tempfile as _tf
-
     from mysql_streamer_spark.cdc.pipeline import envelope_pipeline_df
     from mysql_streamer_spark.connectors.python_source import (
         stream_events_from_python_source,
@@ -80,7 +78,7 @@ def q_streaming_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pyarrow.parquet as _pq
 
-    work = _tf.mkdtemp(prefix="mss_pysrc_stream_")
+    work = scratch_dir("mss_pysrc_stream_")
     out, ckpt = f"{work}/out", f"{work}/ckpt"
     from mysql_streamer_spark.connectors.python_source import _parquet_files
 
@@ -102,7 +100,11 @@ def q_streaming_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # off runner.drain: under availableNow the simple reader serves only
-    # its first batch_rows batch
+    # its first batch_rows batch. This is a limit of PySpark 4.1's Python
+    # data source API, not of the reader: it has no read-limit or
+    # availableNow hook (_SimpleStreamReaderWrapper has no availableNow
+    # path), and latestOffset() takes no start offset, so a reader cannot
+    # pace itself across a restart. processAllAvailable drains it instead.
     q = (
         env.writeStream.foreachBatch(lambda df, i: write_sink_batch(df, out, i))
         .option("checkpointLocation", ckpt)
@@ -127,14 +129,12 @@ def q_streaming_partitioned_source(spark: SparkSession, sf_dir: str) -> DataFram
     oracle as streaming_python_source: the result must hash-match the
     batch envelope, proving the parallel read loses and duplicates
     nothing."""
-    import tempfile as _tf
-
     from mysql_streamer_spark.cdc.pipeline import envelope_pipeline_df
     from mysql_streamer_spark.connectors.python_source import (
         stream_events_from_python_source,
     )
 
-    work = _tf.mkdtemp(prefix="mss_pysrc_part_stream_")
+    work = scratch_dir("mss_pysrc_part_stream_")
     out, ckpt = f"{work}/out", f"{work}/ckpt"
     env = envelope_pipeline_df(
         stream_events_from_python_source(spark, sf_dir, partitioned=True)
@@ -264,11 +264,11 @@ WHERE session_end <= max_ts - INTERVAL 1 HOUR
 
 
 def q_streaming_upsert_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incrementally-maintained latest-state table: one-file-per-trigger
-    micro-batches upsert into a generation-versioned keyed table
-    (streaming MERGE), and the FINAL generation must equal the batch
-    latest-state query over all input — the materialized-view invariant,
-    checked against the same oracle as cdc_latest_state."""
+    """Incrementally-maintained latest-state table: each one-file-per-trigger
+    micro-batch writes its own latest row per key under its batch id
+    (streaming MERGE), and the partials folded on read must equal the
+    batch latest-state query over all input — the materialized-view
+    invariant, checked against the same oracle as cdc_latest_state."""
     from mysql_streamer_spark.streaming.runner import (
         read_latest_state,
         run_upsert_stream,
@@ -347,7 +347,7 @@ def q_streaming_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mysql_streamer_spark.streaming.runner import load_events_stream
     from mysql_streamer_spark.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="mss_incr_stream_")
+    work = scratch_dir("mss_incr_stream_")
     src = f"{work}/src"
     # four range files -> four micro-batches (the single driver parquet
     # would otherwise drain in one trigger and prove nothing incremental)
@@ -383,7 +383,7 @@ def q_streaming_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFr
 
     from mysql_streamer_spark.streaming.transform_state import run_profile_stream
 
-    work = tempfile.mkdtemp(prefix="mss_tws_")
+    work = scratch_dir("mss_tws_")
     src = f"{work}/src"
     os.makedirs(src)
     con = duckdb.connect()
@@ -452,8 +452,6 @@ def q_streaming_secure_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the composed operators) — no stateful operator, no shuffle;
     the checkpointed source offsets give exactly-once wire output under
     restart like every other stream here."""
-    import tempfile as _tf
-
     from mysql_streamer_spark.cdc.encryption import (
         EncryptionConfig,
         resource_key_location,
@@ -468,7 +466,7 @@ def q_streaming_secure_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         seal_to_avro,
     )
 
-    work = _tf.mkdtemp(prefix="mss_secure_stream_")
+    work = scratch_dir("mss_secure_stream_")
     out, ckpt = f"{work}/out", f"{work}/ckpt"
     cfg = EncryptionConfig("AES_MODE_CBC-1", resource_key_location())
     env = envelope_pipeline_df(
@@ -525,8 +523,6 @@ def q_streaming_confluent_publish(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale shape: encode is one mapInArrow stage inside each micro-batch
     plan — map-only, per-task compiled codecs; exactly-once wire output
     under restart via source offsets x per-batch-id overwrite."""
-    import tempfile as _tf
-
     from mysql_streamer_spark.cdc.pipeline import envelope_pipeline_df
     from mysql_streamer_spark.connectors.avro_wire import (
         confluent_payload_decode,
@@ -536,7 +532,7 @@ def q_streaming_confluent_publish(spark: SparkSession, sf_dir: str) -> DataFrame
         stream_events_from_python_source,
     )
 
-    work = _tf.mkdtemp(prefix="mss_confluent_stream_")
+    work = scratch_dir("mss_confluent_stream_")
     out, ckpt = f"{work}/out", f"{work}/ckpt"
     env = envelope_pipeline_df(
         stream_events_from_python_source(spark, sf_dir, partitioned=True)
@@ -596,7 +592,7 @@ def q_streaming_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    work = tempfile.mkdtemp(prefix="mss_late_")
+    work = scratch_dir("mss_late_")
     src = f"{work}/src"
     os.makedirs(src)
     # split with pyarrow; normalize ts to µs (the same ns->µs truncation
@@ -669,14 +665,12 @@ def q_streaming_ddl_barrier(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded control plane) and one constant-size state file; data rows
     take a broadcast interval join, map-side. The final aggregate is the
     same partial-aggregated count as the batch twin."""
-    import tempfile as _tf
-
     from mysql_streamer_spark.streaming.ddl_barrier import (
         run_ddl_barrier_stream,
         stage_barrier_feed,
     )
 
-    work = _tf.mkdtemp(prefix="mss_ddl_barrier_")
+    work = scratch_dir("mss_ddl_barrier_")
     src, out, ckpt, state = (
         f"{work}/src",
         f"{work}/out",
@@ -722,8 +716,6 @@ def q_streaming_txn_atomic_batches(spark: SparkSession, sf_dir: str) -> DataFram
     the target), the buffer refills in 256-row chunks, and the heavy
     plan stays downstream of the source — identical to the non-atomic
     reader's cost envelope."""
-    import tempfile as _tf
-
     import pyarrow.parquet as _pq
 
     from mysql_streamer_spark.connectors.buffered import DEFAULT_TXN_EVENTS
@@ -741,11 +733,10 @@ def q_streaming_txn_atomic_batches(spark: SparkSession, sf_dir: str) -> DataFram
     events = stream_events_from_python_source(
         spark, sf_dir, batch_rows=batch_rows, txn_atomic=True
     )
-    work = _tf.mkdtemp(prefix="mss_txn_atomic_")
+    work = scratch_dir("mss_txn_atomic_")
     out, ckpt = f"{work}/out", f"{work}/ckpt"
 
-    # off runner.drain: under availableNow the simple reader serves only
-    # its first batch_rows batch
+    # off runner.drain for the reason q_streaming_python_source gives
     q = (
         events.writeStream.foreachBatch(
             lambda df, i: write_sink_batch(df.select("event_id"), out, i)
@@ -898,8 +889,6 @@ def q_streaming_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     crawler deposits); offsets are a pure function of the directory, so
     replay after crash re-reads exactly the committed file set. No
     shuffle — parse, project, and sha are all within the per-file task."""
-    import tempfile as _tf
-
     from mysql_streamer_spark.connectors.warc import (
         register_warc_source,
         warc_write_files,
@@ -907,7 +896,7 @@ def q_streaming_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mysql_streamer_spark.queries.pipeline import WARC_DATE
     from mysql_streamer_spark.tables import load_table, spread
 
-    work = _tf.mkdtemp(prefix="mss_warc_stream_")
+    work = scratch_dir("mss_warc_stream_")
     drop, out, ckpt = f"{work}/drop", f"{work}/out", f"{work}/ckpt"
 
     docs = (

@@ -58,8 +58,3 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def tune_for_scale(spark: SparkSession, target_partition_bytes: int = 128 * 1024 * 1024) -> None:
-    """Settings that matter when inputs are TB-scale (no-ops on tiny data)."""
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(target_partition_bytes))
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", str(64 * 1024 * 1024))

@@ -10,8 +10,11 @@ reference's per-table Kafka topic partitioning.
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
+import shutil
+import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -48,6 +51,14 @@ def fsync_dir(path: str) -> None:
         os.fsync(fd)
     finally:
         os.close(fd)
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh temp directory, removed at interpreter exit. Not sooner: the
+    queries that make one return a lazy frame over files inside it."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, True)
+    return path
 
 
 def read_json(path: str):

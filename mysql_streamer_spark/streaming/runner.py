@@ -45,8 +45,10 @@ from pyspark.sql.streaming import DataStreamWriter
 
 from mysql_streamer_spark.cdc.pipeline import changelog_from_cdc, envelope_pipeline_df
 from mysql_streamer_spark.cdc.source import events_as_cdc
+from mysql_streamer_spark.skew import latest_by_key
 from mysql_streamer_spark.streaming import state_table
 from mysql_streamer_spark.streaming.singleton import NamespaceLock
+from mysql_streamer_spark.tables import normalize_timestamps
 
 
 #: Production state backend: RocksDB keeps stateful-operator state (dedup
@@ -89,14 +91,7 @@ def load_events_stream(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(source_dir)
     )
-    ts_type = dict(stream.dtypes).get("ts")
-    if ts_type == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
-        # watermarks reject TIMESTAMP_NTZ; session tz is UTC so the cast is
-        # value-preserving and matches the batch loader's normalization
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    return normalize_timestamps(stream, ["ts"])
 
 
 def drain(writer: DataStreamWriter, checkpoint_dir: str) -> None:
@@ -395,6 +390,11 @@ def run_interval_join_stream(
     )
 
 
+#: The upsert table's business key and the columns its latest row carries.
+_UPSERT_KEYS = ["database_name", "table_name", "pk"]
+_UPSERT_PAYLOAD = ["message_type", "payload_k", "payload_val"]
+
+
 def run_upsert_stream(
     spark: SparkSession,
     source_dir: str,
@@ -404,52 +404,36 @@ def run_upsert_stream(
     fail_after_batches: int | None = None,
 ) -> int:
     """Incrementally-maintained latest-state table (streaming MERGE/upsert):
-    each micro-batch's envelope messages upsert into a keyed state table —
     new keys insert, existing keys keep whichever version has the higher
-    txn_order. The final table equals the BATCH latest-state query over
-    the full input (the materialized-view invariant), which is exactly
-    what the oracle checks.
+    txn_order. ``read_latest_state`` over the final table equals the BATCH
+    latest-state query over the full input (the materialized-view
+    invariant), which is exactly what the oracle checks.
 
-    Mechanics: the state lives in generation directories (gen=N); each
-    batch reads the previous generation, unions the batch's envelope,
-    re-reduces with the same map-side-combinable max_by as the batch
-    query, and writes gen=N+1. A replayed batch (crash between write and
-    checkpoint commit) re-derives the same generation from the same
-    inputs — the upsert is deterministic and idempotent per batch id, so
-    recovery is exactly-once. At scale the state table would be bucketed
-    by the business key so the per-batch reduce co-locates with no
-    shuffle of the existing state (storage.write_bucketed); generations
-    are how table formats without transactions emulate Delta/Iceberg
-    commit atomicity.
+    Mechanics: each micro-batch writes only its own latest row per key
+    under its batch id, and the read folds the partials with the same
+    map-side-combinable max_by. txn_order is unique per key, so max_by over
+    any union of per-batch partials equals the one-pass answer; per-batch
+    work is proportional to the batch, not to the table. A replayed batch
+    (crash between write and checkpoint commit) overwrites its own
+    ``batch_id=N`` directory with identical rows, so recovery is
+    exactly-once. Limits: storage grows with the changes (reduced per
+    batch, never compacted) and every read folds all partials; a batch
+    written but not yet committed is visible until its replay rewrites
+    it, as in every per-batch-id sink here.
 
     Returns the number of micro-batches executed.
     """
-    import os as _os
-
-    from mysql_streamer_spark.skew import latest_by_key
-
-    keys = ["database_name", "table_name", "pk"]
-    payload = ["message_type", "payload_k", "payload_val"]
     done = [0]
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if fail_after_batches is not None and done[0] >= fail_after_batches:
             raise RuntimeError(f"injected crash before batch {batch_id}")
-        env = envelope_pipeline_df(batch_df).select(*keys, "txn_order", *payload)
-        gen_dir = f"{state_dir}/gen={batch_id}"
-        prev = [
-            f"{state_dir}/{d}"
-            for d in (_os.listdir(state_dir) if _os.path.isdir(state_dir) else [])
-            if d.startswith("gen=") and int(d.split("=")[1]) < batch_id
-        ]
-        if prev:
-            latest_prev = max(prev, key=lambda p: int(p.split("=")[1]))
-            merged = spark.read.parquet(latest_prev).unionByName(env)
-        else:
-            merged = env
-        latest_by_key(merged, keys, "txn_order", payload).write.mode(
-            "overwrite"
-        ).parquet(gen_dir)
+        env = envelope_pipeline_df(batch_df)
+        write_sink_batch(
+            latest_by_key(env, _UPSERT_KEYS, "txn_order", _UPSERT_PAYLOAD),
+            state_dir,
+            batch_id,
+        )
         done[0] += 1
 
     events = load_events_stream(spark, source_dir, max_files_per_trigger)
@@ -458,11 +442,8 @@ def run_upsert_stream(
 
 
 def read_latest_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """The newest generation of the upsert state table."""
-    import os as _os
-
-    gens = [
-        d for d in _os.listdir(state_dir) if d.startswith("gen=")
-    ]
-    newest = max(gens, key=lambda d: int(d.split("=")[1]))
-    return spark.read.parquet(f"{state_dir}/{newest}")
+    """The upsert table: the per-batch partials folded to one latest row
+    per key."""
+    return latest_by_key(
+        read_sink(spark, state_dir), _UPSERT_KEYS, "txn_order", _UPSERT_PAYLOAD
+    )

@@ -8,6 +8,7 @@ documents embeddings — one parquet file per table under
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -68,28 +69,24 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # pin it here — the driver harness builds its own SparkSession and
         # must get the same values as our tuned session
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = normalize_timestamps(spark.read.parquet(table_path(sf_dir, name)), ts_cols)
+    _PLAN_CACHE[cache_key] = df
+    return df
+
+
+def normalize_timestamps(df: DataFrame, ts_cols: Iterable[str]) -> DataFrame:
+    """Make each of ``ts_cols`` a TIMESTAMP, for a batch or a streaming
+    frame read with ``spark.sql.legacy.parquet.nanosAsLong`` set."""
     dtypes = dict(df.dtypes)
     for c in ts_cols:
         if dtypes.get(c) == "bigint":  # TIMESTAMP(NANOS) read as ns-since-epoch
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
         elif dtypes.get(c) == "timestamp_ntz":
-            # normalize to TIMESTAMP (session tz is pinned UTC, so the cast
-            # is value-preserving): watermarks/windows require TIMESTAMP,
-            # and the DuckDB oracle's naive timestamps mean UTC
+            # normalize to TIMESTAMP (session tz is UTC, so the cast is
+            # value-preserving): watermarks/windows require TIMESTAMP, and
+            # the DuckDB oracle's naive timestamps mean UTC
             df = df.withColumn(c, F.col(c).cast("timestamp"))
-    _PLAN_CACHE[cache_key] = df
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view (for the SQL API paths)."""
-    for name in TABLE_NAMES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def spread(df: DataFrame, key: str = "doc_id") -> DataFrame:

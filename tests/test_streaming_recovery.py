@@ -360,3 +360,55 @@ def test_stateful_drain_freezes_its_policy_and_restores_the_session(
     assert meta["conf"][_PROVIDER_KEY] == ROCKSDB_PROVIDER
     assert meta["conf"][_PARTITIONS_KEY] == str(STATE_PARTITIONS) == "8"
     assert {k: spark.conf.get(k) for k in before} == before
+
+
+def test_upsert_stream_writes_each_batchs_own_latest_rows(
+    spark, multi_file_events, tmp_path
+):
+    """Each micro-batch of the upsert stream lands exactly the latest row
+    per key of its OWN input under its batch id; no table-wide generation
+    is re-read or rewritten."""
+    import json
+    import os
+
+    from mysql_streamer_spark.skew import latest_by_key
+    from mysql_streamer_spark.streaming.runner import run_upsert_stream
+
+    keys = ["database_name", "table_name", "pk"]
+    payload = ["message_type", "payload_k", "payload_val"]
+    src, _ = multi_file_events
+    state, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
+
+    n = run_upsert_stream(spark, src, state, ckpt, max_files_per_trigger=1)
+
+    assert n == 4
+    entries = [d for d in os.listdir(state) if not d.startswith((".", "_"))]
+    assert not any(d.startswith("gen=") for d in entries)
+    assert sorted(entries) == [f"batch_id={i}" for i in range(n)]
+    for i in range(n):
+        with open(f"{ckpt}/sources/0/{i}") as fh:
+            files = [json.loads(line)["path"] for line in fh.read().splitlines()[1:]]
+        assert len(files) == 1
+        env = envelope_pipeline_df(spark.read.parquet(*files))
+        expected = latest_by_key(env, keys, "txn_order", payload)
+        got = spark.read.parquet(f"{state}/batch_id={i}")
+        assert got.columns == expected.columns
+        assert got.exceptAll(expected).count() == 0
+        assert expected.exceptAll(got).count() == 0
+
+
+def test_query_scratch_dirs_are_removed_at_exit(sf_dir, monkeypatch):
+    """A streaming query's work dir is registered for removal at
+    interpreter exit (not sooner: the query returns a lazy frame over it)."""
+    import atexit
+    import shutil
+
+    from mysql_streamer_spark.queries import streaming_q
+
+    registered = []
+    monkeypatch.setattr(atexit, "register", lambda *a: registered.append(a))
+    work = streaming_q._staged_source(sf_dir)
+    try:
+        assert (shutil.rmtree, work, True) in registered
+    finally:
+        shutil.rmtree(work, True)
