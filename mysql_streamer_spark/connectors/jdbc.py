@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mysql_streamer_spark.storage import scratch_dir
+
 DEFAULT_FETCH_SIZE = 10_000
 
 
@@ -96,17 +98,6 @@ def _sql_literal(v) -> str:
 #: leaks its JVM memory, file locks, and mkdtemp directory.
 _FIXTURE_CACHE: dict[tuple[str, str], str] = {}
 
-#: every mkdtemp this module created, removed at interpreter exit
-_FIXTURE_DIRS: list[str] = []
-
-
-def _cleanup_fixture_dirs() -> None:  # pragma: no cover - atexit path
-    import shutil
-
-    for d in _FIXTURE_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-
-
 def shutdown_derby(spark: SparkSession, url: str) -> None:
     """Cleanly shut down one embedded Derby database, releasing its page
     cache and file locks. Derby signals a SUCCESSFUL single-db shutdown by
@@ -134,19 +125,12 @@ def embedded_derby_fixture(
     per Spark application). The database is shut down after seeding —
     reads auto-boot it — and every fixture directory is removed at
     interpreter exit."""
-    import atexit
-    import tempfile
-
     app_id = spark.sparkContext.applicationId
     if cache_key is not None:
         hit = _FIXTURE_CACHE.get((app_id, cache_key))
         if hit is not None:
             return hit
-    if not _FIXTURE_DIRS:
-        atexit.register(_cleanup_fixture_dirs)
-    tmp_root = tempfile.mkdtemp(prefix="mss_derby_")
-    _FIXTURE_DIRS.append(tmp_root)
-    db_dir = tmp_root + "/db"
+    db_dir = scratch_dir("mss_derby_") + "/db"
     url = f"jdbc:derby:{db_dir}"
     jvm = spark._jvm
     jvm.java.lang.Class.forName(DERBY_DRIVER)

@@ -32,7 +32,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from mysql_streamer_spark.storage import atomic_write_json, read_json
+from mysql_streamer_spark.storage import atomic_write_json, fsync_dir, read_json
 
 
 MANIFEST_NAME = "_MANIFEST.json"
@@ -117,6 +117,7 @@ class ManifestSinkWriter(DataSourceArrowWriter):
         # then atomically repoints the HEAD manifest: readers pin a
         # version for time travel or follow HEAD for latest — the
         # Delta/Iceberg snapshot-log idea in one file pair
+        fsync_dir(self.path)  # the parts' entries, before a manifest names them
         atomic_write_json(os.path.join(self.path, _versioned_name(version)), manifest)
         atomic_write_json(os.path.join(self.path, MANIFEST_NAME), manifest)
 
@@ -175,6 +176,7 @@ class ManifestStreamWriter(DataSourceStreamArrowWriter):
             "files": files,
             "n_rows": sum(f["n_rows"] for f in files),
         }
+        fsync_dir(self.path)  # the parts' entries, before a manifest names them
         atomic_write_json(os.path.join(self.path, _versioned_name(version)), manifest)
         ledger[key] = version
         atomic_write_json(self._ledger_path(), ledger)

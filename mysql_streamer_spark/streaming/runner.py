@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.types import StructType
 
 from mysql_streamer_spark.cdc.pipeline import changelog_from_cdc, envelope_pipeline_df
 from mysql_streamer_spark.cdc.source import events_as_cdc
@@ -154,9 +155,10 @@ def run_envelope_stream(
     ``fail_after_batches=N`` injects a crash after N successful batches
     (mirrors the reference's RestartHelper stop-after-N hook,
     testing_helper/restart_helper.py:39-124) — the caller restarts with the
-    same checkpoint to exercise recovery. ``state_dir`` additionally keeps
-    the reference-parity state after each sink write, derived from the batch
-    read back from the sink: ``<cluster_name>.json`` (global_event_state)
+    same checkpoint to exercise recovery. Every message carries
+    ``cluster_name``. ``state_dir`` additionally keeps the reference-parity
+    state after each sink write, from one aggregate over the batch read back
+    under its written schema: ``<cluster_name>.json`` (global_event_state)
     and ``topic_offsets.json`` (data_event_checkpoint), driver-side JSON
     committed by temp file + fsync + rename (streaming/state_table.py).
     """
@@ -165,14 +167,15 @@ def run_envelope_stream(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if fail_after_batches is not None and done[0] >= fail_after_batches:
             raise RuntimeError(f"injected crash before batch {batch_id}")
-        write_sink_batch(envelope_pipeline_df(batch_df), out_dir, batch_id)
+        env = envelope_pipeline_df(batch_df, cluster_name=cluster_name)
+        write_sink_batch(env, out_dir, batch_id)
         if state_dir is not None:
             # module attributes, looked up per batch (callers may swap them)
-            committed = read_sink_batch(spark, out_dir, batch_id)
-            pos = state_table.batch_position(committed)
+            committed = read_sink_batch(spark, out_dir, batch_id, env.schema)
+            pos, marks = state_table.batch_position(committed)
             if pos is not None:
-                state_table.advance_state(spark, state_dir, cluster_name, pos, batch_id)
-                state_table.save_topic_offsets(committed, state_dir, batch_id)
+                state_table.advance_state(state_dir, cluster_name, pos, batch_id)
+                state_table.save_topic_offsets(marks, state_dir, batch_id)
         done[0] += 1
 
     events = load_events_stream(spark, source_dir, max_files_per_trigger)
@@ -204,10 +207,12 @@ def read_sink(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.parquet(out_dir).drop("batch_id")
 
 
-def read_sink_batch(spark: SparkSession, out_dir: str, batch_id: int) -> DataFrame:
-    """One committed batch's rows (reads back what was just written, so the
-    position reflects durable data only)."""
-    return spark.read.parquet(f"{out_dir}/batch_id={batch_id}")
+def read_sink_batch(
+    spark: SparkSession, out_dir: str, batch_id: int, schema: StructType
+) -> DataFrame:
+    """One committed batch's rows, read back under the ``schema`` it was
+    written with (durable data only, and no footer-inference job)."""
+    return spark.read.schema(schema).parquet(f"{out_dir}/batch_id={batch_id}")
 
 
 def run_dedup_stream(

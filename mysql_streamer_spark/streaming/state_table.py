@@ -6,8 +6,10 @@ checkpoint already owns recovery; this state is an inspectable "where is
 the pipeline" view kept as two driver-side JSON documents in ``state_dir``:
 ``<cluster>.json`` (the position row) and ``topic_offsets.json`` (per-topic
 high-water marks). Each save is one ``storage.atomic_write_json`` commit
-(temp file + fsync + rename), so saving and loading run no Spark job; the
-only Spark work is the aggregates over the batch just read back.
+(temp file + fsync + rename). The one Spark job is ``batch_position``, a
+single grouped aggregate over the batch just read back that yields both the
+position and the per-topic marks; everything else is plain Python over the
+two documents.
 """
 
 from __future__ import annotations
@@ -15,7 +17,7 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mysql_streamer_spark.cdc.positions import LogPosition, construct_position
@@ -28,21 +30,29 @@ def _order(p: LogPosition) -> tuple:
     return (p.log_file, p.log_pos, p.offset or 0)
 
 
-def batch_position(env_batch: DataFrame) -> LogPosition | None:
-    """The batch's high-water LogPosition — the row with max txn_order
-    (one tiny aggregate; driver sees a single row, control-plane only)."""
-    row = env_batch.agg(
-        F.max_by(
-            F.struct("log_file", "log_pos", "offset"), F.col("txn_order")
-        ).alias("p")
-    ).collect()[0]["p"]
-    if row is None:
-        return None
-    return LogPosition(log_file=row.log_file, log_pos=row.log_pos, offset=row.offset)
+def batch_position(
+    committed: DataFrame,
+) -> tuple[LogPosition | None, dict[str, tuple[int, int]]]:
+    """``(position, marks)`` of a committed envelope batch, from one grouped
+    aggregate per ``db.table`` topic: ``marks`` maps each topic to
+    ``(max_txn_order, n_messages)`` and ``position`` is the max-txn_order
+    row's (None for an empty batch). txn_order is unique per row, so the
+    topic with the largest max holds the batch's max row."""
+    topic = F.concat_ws(".", "database_name", "table_name").alias("topic")
+    position = F.max_by(F.struct("log_file", "log_pos", "offset"), "txn_order")
+    rows = committed.groupBy(topic).agg(
+        F.max("txn_order").alias("max_txn_order"),
+        F.count("*").alias("n_messages"),
+        position.alias("p"),
+    ).collect()
+    marks = {r.topic: (r.max_txn_order, r.n_messages) for r in rows}
+    if not rows:
+        return None, marks
+    p = max(rows, key=lambda r: r.max_txn_order).p
+    return LogPosition(log_file=p.log_file, log_pos=p.log_pos, offset=p.offset), marks
 
 
 def save_state(
-    spark: SparkSession,
     state_dir: str,
     cluster_name: str,
     position: LogPosition,
@@ -65,22 +75,18 @@ def save_state(
 
 
 def advance_state(
-    spark: SparkSession,
-    state_dir: str,
-    cluster_name: str,
-    position: LogPosition,
-    batch_id: int,
+    state_dir: str, cluster_name: str, position: LogPosition, batch_id: int
 ) -> None:
     """Monotone upsert: a position only ever advances (reference invariant —
     the saved position is a high-water mark, and micro-batches are not
     guaranteed to arrive in event order when backfilling many files)."""
-    existing = load_state(spark, state_dir, cluster_name)
+    existing = load_state(state_dir, cluster_name)
     if existing is not None and _order(existing[0]) >= _order(position):
         position = existing[0]
-    save_state(spark, state_dir, cluster_name, position, batch_id)
+    save_state(state_dir, cluster_name, position, batch_id)
 
 
-def load_state(spark: SparkSession, state_dir: str, cluster_name: str):
+def load_state(state_dir: str, cluster_name: str):
     """(LogPosition, batch_id, is_clean_shutdown) or None if never saved."""
     row = read_json(os.path.join(state_dir, f"{cluster_name}.json"))
     if row is None:
@@ -92,38 +98,30 @@ def load_state(spark: SparkSession, state_dir: str, cluster_name: str):
 # -- per-topic offsets (reference data_event_checkpoint,
 #    models/data_event_checkpoint.py:38-143: kafka_topic -> kafka_offset) --
 
-_TOPIC_SCHEMA = "topic string, max_txn_order long, n_messages long, batch_id long"
 
-
-def save_topic_offsets(env_batch: DataFrame, state_dir: str, batch_id: int) -> None:
-    """Merge one committed batch's per-topic high-water offsets and counts
-    into the saved ones (bulk upsert semantics of the reference's
-    checkpoint table). Idempotent per batch id: a topic already saved at
-    this batch id or later skips it, so a batch replayed after a crash
-    between this save and the engine's commit is not counted twice."""
+def save_topic_offsets(
+    marks: dict[str, tuple[int, int]], state_dir: str, batch_id: int
+) -> None:
+    """Merge one committed batch's per-topic marks (``batch_position``)
+    into the saved ones (bulk upsert semantics of the reference's checkpoint
+    table). Idempotent per batch id: a topic already saved at this batch id
+    or later skips it, so a batch replayed after a crash between this save
+    and the engine's commit is not counted twice."""
     path = os.path.join(state_dir, TOPIC_OFFSETS)
     offsets = read_json(path) or {}
-    topic = F.concat_ws(".", "database_name", "table_name").alias("topic")
-    new = env_batch.groupBy(topic).agg(
-        F.max("txn_order").alias("max_txn_order"), F.count("*").alias("n_messages")
-    )
-    for r in new.collect():
-        unseen = {"max_txn_order": r.max_txn_order, "n_messages": 0, "batch_id": -1}
-        old = offsets.get(r.topic, unseen)
+    for topic, (max_txn_order, n_messages) in marks.items():
+        unseen = {"max_txn_order": max_txn_order, "n_messages": 0, "batch_id": -1}
+        old = offsets.get(topic, unseen)
         if old["batch_id"] < batch_id:
-            offsets[r.topic] = {
-                "max_txn_order": max(old["max_txn_order"], r.max_txn_order),
-                "n_messages": old["n_messages"] + r.n_messages,
+            offsets[topic] = {
+                "max_txn_order": max(old["max_txn_order"], max_txn_order),
+                "n_messages": old["n_messages"] + n_messages,
                 "batch_id": batch_id,
             }
     os.makedirs(state_dir, exist_ok=True)
     atomic_write_json(path, offsets)
 
 
-def load_topic_offsets(spark: SparkSession, state_dir: str) -> DataFrame:
-    """The saved per-topic offsets (empty if none were saved yet)."""
-    offsets = read_json(os.path.join(state_dir, TOPIC_OFFSETS)) or {}
-    rows = [
-        (t, o["max_txn_order"], o["n_messages"], o["batch_id"]) for t, o in offsets.items()
-    ]
-    return spark.createDataFrame(rows, _TOPIC_SCHEMA)
+def load_topic_offsets(state_dir: str) -> dict[str, dict[str, int]]:
+    """The saved per-topic offsets (``{}`` if none were saved yet)."""
+    return read_json(os.path.join(state_dir, TOPIC_OFFSETS)) or {}

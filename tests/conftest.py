@@ -11,12 +11,10 @@ SF_SMOKE = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="session")
-def spark():
-    import tempfile
-
+def spark(tmp_path_factory):
     from mysql_streamer_spark.session import get_spark
 
-    warehouse = tempfile.mkdtemp(prefix="mss_warehouse_")
+    warehouse = str(tmp_path_factory.mktemp("mss_warehouse"))
     spark = get_spark(
         "tests", cpus=8, extra_conf={"spark.sql.warehouse.dir": warehouse}
     )

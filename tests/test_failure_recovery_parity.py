@@ -128,15 +128,9 @@ def test_saved_offsets_describe_durable_sink(spark, sf_dir, tmp_path):
             state_dir=state,
         )
     durable = read_sink(spark, out)
-    saved = load_topic_offsets(spark, state)
     by_topic = {
-        r.topic: (r.max_txn_order, r.n_messages)
-        for r in saved.groupBy("topic")
-        .agg(
-            F.max("max_txn_order").alias("max_txn_order"),
-            F.sum("n_messages").alias("n_messages"),
-        )
-        .collect()
+        t: (o["max_txn_order"], o["n_messages"])
+        for t, o in load_topic_offsets(state).items()
     }
     actual = {
         r.topic: (r.max_txn_order, r.n)
@@ -148,7 +142,7 @@ def test_saved_offsets_describe_durable_sink(spark, sf_dir, tmp_path):
         .collect()
     }
     assert by_topic == actual, "state table out of sync with durable sink"
-    pos, batch_id, clean = load_state(spark, state, "refresh_primary")
+    pos, batch_id, clean = load_state(state, "refresh_primary")
     assert batch_id == 1 and clean is False
 
     run_envelope_stream(

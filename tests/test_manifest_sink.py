@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 
 def test_manifest_sink_roundtrip(spark, sf_dir, tmp_path):
     from mysql_streamer_spark.connectors.manifest_sink import (
@@ -379,3 +381,35 @@ def test_jsonl_shard_renames_are_durable_before_the_manifest(tmp_path, monkeypat
     writer.commit([msg])
     assert table_dir_synced_at_manifest == [True]
     assert storage.read_json(str(tmp_path / "_MANIFEST.json"))["total_rows"] == 1
+
+
+@pytest.mark.parametrize("stream", [False, True])
+def test_manifest_parts_are_durable_before_the_manifest(tmp_path, monkeypatch, stream):
+    """The batch and the streaming writer fsync the directory holding the
+    new parts before commit() writes a manifest naming them."""
+    import pyarrow as pa
+
+    from mysql_streamer_spark.connectors import manifest_sink
+
+    synced = _record_fsyncs(monkeypatch)
+    options = {"path": str(tmp_path)}
+    if stream:
+        writer = manifest_sink.ManifestStreamWriter(options)
+    else:
+        writer = manifest_sink.ManifestSinkWriter(options)
+    msg = writer.write(iter(pa.table({"a": [1, 2]}).to_batches()))
+    table_dir_synced_at_manifest = []
+    real = manifest_sink.atomic_write_json
+
+    def commit_manifest(path, obj):
+        table_dir_synced_at_manifest.append(os.stat(tmp_path).st_ino in synced)
+        real(path, obj)
+
+    monkeypatch.setattr(manifest_sink, "atomic_write_json", commit_manifest)
+    if stream:
+        writer.commit([msg], 0)
+    else:
+        writer.commit([msg])
+    # the stream writer also commits its batch ledger
+    assert table_dir_synced_at_manifest == [True] * (3 if stream else 2)
+    assert manifest_sink.read_manifest(str(tmp_path))["n_rows"] == 2

@@ -596,7 +596,7 @@ def test_documented_map_side_plans_have_no_shuffle(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _streaming_frames(spark, sf_dir):
+def _streaming_frames(spark, sf_dir, tmp_path):
     from mysql_streamer_spark.cdc.pipeline import envelope_pipeline_df
     from mysql_streamer_spark.connectors.python_source import (
         stream_events_from_python_source,
@@ -650,7 +650,7 @@ def _streaming_frames(spark, sf_dir):
         # feed against the final-state dimension: one broadcast interval
         # join, no cartesian
         "streaming_ddl_barrier": (
-            _ddl_barrier_frame(spark, sf_dir),
+            _ddl_barrier_frame(spark, sf_dir, str(tmp_path / "barrier_src")),
             ["StreamingRelation", "Join"],
         ),
         # the encode stage is the IDENTICAL payload_to_confluent the batch
@@ -687,9 +687,7 @@ def _confluent_publish_frame(spark, sf_dir):
     )
 
 
-def _ddl_barrier_frame(spark, sf_dir):
-    import tempfile
-
+def _ddl_barrier_frame(spark, sf_dir, src):
     from mysql_streamer_spark.schema.bootstrap import versioned_dim_rows
     from mysql_streamer_spark.streaming.ddl_barrier import (
         FEED_SCHEMA,
@@ -698,7 +696,6 @@ def _ddl_barrier_frame(spark, sf_dir):
         stage_barrier_feed,
     )
 
-    src = tempfile.mkdtemp(prefix="mss_barrier_audit_") + "/src"
     stage_barrier_feed(spark, sf_dir, src)
     feed = spark.readStream.schema(FEED_SCHEMA).parquet(src)
     return route_data_events(
@@ -706,13 +703,13 @@ def _ddl_barrier_frame(spark, sf_dir):
     )
 
 
-def test_streaming_plans_audited_via_logical_composition(spark, sf_dir):
+def test_streaming_plans_audited_via_logical_composition(spark, sf_dir, tmp_path):
     """Every _SKIP entry gets an equivalent-plan assertion: the streaming
     DataFrame analyzes cleanly, its analyzed logical plan contains no
     cross/cartesian join, and the claimed stateful operator is present.
     (optimizedPlan() is unavailable pre-start on a streaming frame — the
     analyzed plan carries the same join structure.)"""
-    frames = _streaming_frames(spark, sf_dir)
+    frames = _streaming_frames(spark, sf_dir, tmp_path)
     assert set(frames) == _SKIP, "audit must cover exactly the _SKIP set"
     for name, (df, required_nodes) in frames.items():
         assert df.isStreaming, name

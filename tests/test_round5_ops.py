@@ -209,12 +209,10 @@ def test_pii_scrub_patterns_on_adversarial_strings(spark):
         assert got[i] == (e, p4, ph), f"case {i}: {cases[i][0]!r} -> {got[i]}"
 
 
-def test_streaming_secure_publish_wire_is_opaque(spark, sf_dir):
+def test_streaming_secure_publish_wire_is_opaque(spark, sf_dir, tmp_path):
     """The streamed wire bytes must carry routing fields in the clear
     (consumers partition without the key) but NO plaintext payload: the
     payload JSON's field names must not appear anywhere in any message."""
-    import tempfile
-
     from mysql_streamer_spark.cdc.encryption import (
         EncryptionConfig,
         encrypt_envelope,
@@ -226,8 +224,7 @@ def test_streaming_secure_publish_wire_is_opaque(spark, sf_dir):
         stream_events_from_python_source,
     )
 
-    work = tempfile.mkdtemp(prefix="mss_opaque_")
-    out, ckpt = f"{work}/out", f"{work}/ckpt"
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     cfg = EncryptionConfig("AES_MODE_CBC-1", resource_key_location())
     env = envelope_pipeline_df(
         stream_events_from_python_source(spark, sf_dir, partitioned=True)

@@ -107,7 +107,7 @@ def test_state_table_and_metrics(spark, multi_file_events, tmp_path):
     finally:
         spark.streams.removeListener(listener)
 
-    pos, batch_id, clean = load_state(spark, state, "refresh_primary")
+    pos, batch_id, clean = load_state(state, "refresh_primary")
     assert isinstance(pos, LogPosition)
     assert batch_id == 1, "state row must reflect the LAST committed batch"
     # the saved position is the global high-water mark of the whole sink
@@ -133,6 +133,24 @@ def test_state_table_and_metrics(spark, multi_file_events, tmp_path):
     assert 0 < lags["p50_s"] <= lags["p99_s"] <= lags["max_s"]
 
 
+def test_cluster_name_reaches_the_messages_and_the_state(
+    spark, multi_file_events, tmp_path
+):
+    """The stream's cluster_name is stamped on every message (the IV scope
+    keeps clusters apart by it), and it names the state document."""
+    import os
+
+    src, _ = multi_file_events
+    out, ckpt, state = (str(tmp_path / d) for d in ("out", "ckpt", "state"))
+    run_envelope_stream(
+        spark, src, out, ckpt, max_files_per_trigger=2, state_dir=state,
+        cluster_name="c2",
+    )
+    got = read_sink(spark, out).select("cluster_name").distinct().collect()
+    assert [r.cluster_name for r in got] == ["c2"]
+    assert "c2.json" in os.listdir(state)
+
+
 def test_topic_offsets_checkpoint(spark, multi_file_events, tmp_path):
     """K3 parity with data_event_checkpoint: per db.table topic, the saved
     high-water offset equals the sink's max txn_order and counts add up."""
@@ -145,8 +163,8 @@ def test_topic_offsets_checkpoint(spark, multi_file_events, tmp_path):
         spark, src, out, ckpt, max_files_per_trigger=2, state_dir=state
     )
     saved = {
-        r.topic: (r.max_txn_order, r.n_messages)
-        for r in load_topic_offsets(spark, state).collect()
+        t: (o["max_txn_order"], o["n_messages"])
+        for t, o in load_topic_offsets(state).items()
     }
     expected = {
         r.topic: (r.mx, r.n)
@@ -218,13 +236,13 @@ def test_crash_after_sink_write_replays_into_consistent_state(
     assert got.select("cluster_name", "txn_order").distinct().count() == got.count()
 
     hi = got.orderBy(got.txn_order.desc()).limit(1).collect()[0]
-    pos, batch_id, _ = state_table.load_state(spark, state, "refresh_primary")
+    pos, batch_id, _ = state_table.load_state(state, "refresh_primary")
     assert (pos.log_file, pos.log_pos, pos.offset) == (hi.log_file, hi.log_pos, hi.offset)
     assert batch_id == 1
 
     saved = {
-        r.topic: (r.max_txn_order, r.n_messages)
-        for r in state_table.load_topic_offsets(spark, state).collect()
+        t: (o["max_txn_order"], o["n_messages"])
+        for t, o in state_table.load_topic_offsets(state).items()
     }
     in_sink = {
         r.topic: (r.mx, r.n)
