@@ -117,6 +117,9 @@ class ManifestSinkWriter(DataSourceArrowWriter):
         # then atomically repoints the HEAD manifest: readers pin a
         # version for time travel or follow HEAD for latest — the
         # Delta/Iceberg snapshot-log idea in one file pair
+        # no task creates the directory when no part was written (an empty
+        # frame or first micro-batch to a new path)
+        os.makedirs(self.path, exist_ok=True)
         fsync_dir(self.path)  # the parts' entries, before a manifest names them
         atomic_write_json(os.path.join(self.path, _versioned_name(version)), manifest)
         atomic_write_json(os.path.join(self.path, MANIFEST_NAME), manifest)
@@ -176,6 +179,9 @@ class ManifestStreamWriter(DataSourceStreamArrowWriter):
             "files": files,
             "n_rows": sum(f["n_rows"] for f in files),
         }
+        # no task creates the directory when no part was written (an empty
+        # frame or first micro-batch to a new path)
+        os.makedirs(self.path, exist_ok=True)
         fsync_dir(self.path)  # the parts' entries, before a manifest names them
         atomic_write_json(os.path.join(self.path, _versioned_name(version)), manifest)
         ledger[key] = version

@@ -12,6 +12,12 @@ multi-executor cluster at ~100 TB:
   converts to UTC-aware, util/message_builder.py:101-102) and the DuckDB
   oracle both assume UTC.
 - Arrow enabled for the few Pandas-UDF code paths (vector ops, multimodal).
+- Python workers fork from the package's daemon (``pyworker``), not
+  ``pyspark.daemon``: on CPython 3.11 PySpark's per-task
+  ``importlib.invalidate_caches()`` re-reads the central directories of
+  Spark's zips and the spark-core jar, ~0.2 s per task on every Python
+  boundary (codecs, pandas UDFs, ``applyInPandasWithState``); under the
+  daemon an archive is re-read only when its stat signature changes.
 """
 
 from __future__ import annotations
@@ -21,6 +27,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -51,6 +58,10 @@ def get_spark(
         # construction time on the wider pipelines; the enriched error
         # frames are not worth that in a non-interactive engine
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.python.daemon.module", "mysql_streamer_spark.pyworker")
+        # workers start the daemon with `python -m` from the driver's working
+        # directory: the package's root must be on their path from any other
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -413,3 +413,33 @@ def test_manifest_parts_are_durable_before_the_manifest(tmp_path, monkeypatch, s
     # the stream writer also commits its batch ledger
     assert table_dir_synced_at_manifest == [True] * (3 if stream else 2)
     assert manifest_sink.read_manifest(str(tmp_path))["n_rows"] == 2
+
+
+def test_batch_commit_without_parts_creates_the_table(tmp_path):
+    """A write in which no task produced a part (an empty frame) still
+    publishes version 1 on a path that does not exist yet."""
+    from mysql_streamer_spark.connectors.manifest_sink import (
+        ManifestSinkWriter,
+        latest_version,
+        read_manifest,
+    )
+
+    out = str(tmp_path / "fresh")
+    ManifestSinkWriter({"path": out}).commit([])
+    assert read_manifest(out) == {"version": 1, "files": [], "n_rows": 0}
+    assert latest_version(out) == 1
+
+
+def test_stream_commit_without_parts_creates_the_table(tmp_path):
+    """An empty first micro-batch to a new path publishes version 1."""
+    from mysql_streamer_spark.connectors.manifest_sink import (
+        ManifestStreamWriter,
+        latest_version,
+        read_manifest,
+    )
+
+    out = str(tmp_path / "fresh")
+    ManifestStreamWriter({"path": out}).commit([], 0)
+    manifest = read_manifest(out)
+    assert (manifest["version"], manifest["batch_id"], manifest["n_rows"]) == (1, 0, 0)
+    assert latest_version(out) == 1
