@@ -10,16 +10,23 @@ Spark deployment needs on top of the CDC tables.
 
 Layout
 ------
-- ``session``    : tuned SparkSession builder (AQE, UTC, Arrow).
-- ``tables``     : loaders for the driver's synthetic parquet tables.
+- ``session``    : tuned SparkSession builder (AQE, UTC, Arrow) and the
+                   package's Python worker daemon (``pyworker``).
+- ``tables``     : loaders for the driver's synthetic parquet tables, and
+                   ``local_frame`` for small JVM-local relations.
 - ``cdc``        : the reference's data plane — envelope builder, filters,
                    payload/type transforms, changelog mode, positions.
 - ``schema``     : the reference's control plane — MySQL DDL classifier,
                    schema registry, MySQL->Spark type mapping.
-- ``state``      : checkpoint/state tables + position lookup (recovery).
-- ``streaming``  : Structured Streaming form of the pipeline (exactly-once).
-- ``operators``  : analytics operators (latest-state, as-of join, top-k,
-                   sessionization, dedup family, similarity search).
+- ``streaming``  : Structured Streaming form of the pipeline (exactly-once):
+                   the drain lifecycle, the per-batch sink, the driver-side
+                   position/offset state (``state_table``), the DDL barrier
+                   and the stateful operators.
+- ``connectors`` : sources and sinks (Kafka/Debezium, Avro and Confluent
+                   wire codecs, Python data sources, JDBC, manifest sink).
+- ``queries``    : the registered batch/stream queries and their oracles.
+- ``skew``, ``asof``, ``rangejoin`` : analytics operators (latest-by-key
+                   fold, as-of join, range join).
 - ``functions``  : column-level function library (text stats, vectors).
 - ``multimodal`` : binary-column (image/audio) plumbing with stubbed codecs.
 

@@ -2,18 +2,25 @@
 declarative DataFrame plan (SURVEY.md §7 phase 0).
 
     events (binlog stand-in)
-      -> normalize to CDC shape           (S1/S3, source.py)
-      -> split off heartbeats             (F5/S7)
-      -> schema blacklist                 (F1)
-      -> [optional] table whitelist       (F2)
-      -> refresh rerouting                (S4)
-      -> transaction id + schema id       (P5/T1)
-      -> envelope projection              (P1/P3)
+      -> normalize to CDC shape           (S1/S3, source.py)     one select
+      -> heartbeat split, schema blacklist,
+         [optional] table whitelist       (F5/S7, F1, F2)         one filter
+      -> refresh rerouting + transaction
+         id                               (S4, P5)                one withColumns
+      -> schema id                        (T1)                    broadcast join
+      -> envelope projection              (P3)                    one select
 
 Because it is a single Catalyst plan, the filters get pushed to the scan and
 the schema-id lookup is a broadcast join — there is no per-event Python.
-"""
 
+Each step's expressions are cached ``Column`` objects (source.cdc_columns,
+filters.admission_predicate, envelope.refresh_columns /
+transaction_columns / envelope_columns), built on first use and shared by
+every batch and session. A streaming micro-batch therefore plans its
+envelope in ~70 py4j calls rather than ~460, and its broadcast side is the
+registry's JVM-local dimension (schema/bootstrap.registry_dim_df, one per
+application), so no Python task runs for it.
+"""
 from __future__ import annotations
 
 from collections.abc import Iterable
@@ -24,11 +31,10 @@ from pyspark.sql import functions as F
 from mysql_streamer_spark.cdc.source import events_as_cdc
 from mysql_streamer_spark.cdc.filters import (
     DEFAULT_SCHEMA_BLACKLIST,
-    filter_blacklisted_schemas,
-    filter_table_whitelist,
-    split_heartbeats,
+    admission_predicate,
+    heartbeat_predicate,
 )
-from mysql_streamer_spark.cdc.envelope import build_envelope
+from mysql_streamer_spark.cdc.envelope import build_envelope, reroute_refresh_tables
 from mysql_streamer_spark.tables import load_table, spread
 
 
@@ -53,10 +59,8 @@ def envelope_from_cdc(
 ) -> DataFrame:
     """Admission filters + envelope over an already-normalized CDC stream
     (single- or multi-row source, batch or streaming micro-batch)."""
-    data_events, _heartbeats = split_heartbeats(cdc)
-    admitted = filter_blacklisted_schemas(data_events, blacklist)
-    admitted = filter_table_whitelist(admitted, table_whitelist)
-    return build_envelope(admitted, cluster_name)
+    admit = admission_predicate(tuple(blacklist), tuple(table_whitelist))
+    return build_envelope(cdc.filter(admit), cluster_name)
 
 
 def envelope_pipeline_df(
@@ -99,18 +103,14 @@ def changelog_from_cdc(
     constant-schema projection) shared by the batch query, the streaming
     foreachBatch body, the CLI verb, and the SQL view."""
     from mysql_streamer_spark.cdc.changelog import changelog_projection
-    from mysql_streamer_spark.cdc.envelope import reroute_refresh_tables
 
-    data, _ = split_heartbeats(cdc)
-    return changelog_projection(
-        reroute_refresh_tables(filter_blacklisted_schemas(data, blacklist))
-    )
+    admitted = cdc.filter(admission_predicate(tuple(blacklist)))
+    return changelog_projection(reroute_refresh_tables(admitted))
 
 
 def heartbeat_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The heartbeat side-channel (serial=event_id, timestamp), F4 fixture."""
-    _, hb = split_heartbeats(cdc_events(spark, sf_dir))
-    return hb.select(
+    return cdc_events(spark, sf_dir).filter(heartbeat_predicate()).select(
         F.col("event_id").alias("serial"),
         F.col("timestamp"),
         F.col("log_file"),

@@ -31,7 +31,9 @@ verbatim in the oracle SQL):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import lru_cache
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: Normalized CDC event columns (pre-envelope), FIXTURES.md §F3.
@@ -65,7 +67,7 @@ MESSAGE_TYPE_MAP = {
 MESSAGE_TYPE_DEFAULT = "create"
 
 
-def message_type_column() -> "F.Column":
+def message_type_column() -> Column:
     """event_type -> message_type as a Column expr, generated from
     MESSAGE_TYPE_MAP so Spark and the oracle CASE cannot diverge."""
     expr = None
@@ -81,48 +83,47 @@ def message_type_case_sql() -> str:
     return f"CASE event_type {whens} ELSE '{MESSAGE_TYPE_DEFAULT}' END"
 
 
-def events_as_cdc(events: DataFrame) -> DataFrame:
-    """events(event_id, ts, user_id, event_type, value, props) -> CDC shape."""
-    database = (
-        F.when(F.col("user_id") % 10 == 9, F.lit(HEARTBEAT_DB))
+@lru_cache(maxsize=1)
+def cdc_columns() -> tuple[Column, ...]:
+    """The events -> CDC mapping as one projection (column order =
+    CDC_EVENT_COLUMNS). Built once per process: a Column is an unresolved
+    expression that no session owns, so every batch and every session
+    reuses these instead of rebuilding them through py4j."""
+    is_heartbeat = F.col("user_id") % 10 == 9
+    message_type = message_type_column()
+    return (
+        F.col("event_id"),
+        F.when(is_heartbeat, F.lit(HEARTBEAT_DB))
         .when(F.col("user_id") % 10 == 8, F.lit("test"))
         .otherwise(F.concat(F.lit("db_"), (F.col("user_id") % 2).cast("string")))
+        .alias("database"),
+        F.when(is_heartbeat, F.lit(HEARTBEAT_TABLE))
+        .when(
+            F.col("event_id") % 13 == 0,
+            F.concat(F.col("event_type"), F.lit(REFRESH_SUFFIX)),
+        )
+        .otherwise(F.col("event_type"))
+        .alias("table"),
+        message_type.alias("message_type"),
+        F.col("ts").alias("timestamp"),
+        F.concat(
+            F.lit("binlog."),
+            F.lpad(F.expr("event_id div 1000").cast("string"), 6, "0"),
+        ).alias("log_file"),
+        ((F.col("event_id") % 1000) * 4 + 4).alias("log_pos"),
+        F.lit(0).alias("offset"),
+        F.col("user_id").alias("pk"),
+        F.get_json_object("props", "$.k").cast("int").alias("payload_k"),
+        F.col("value").alias("payload_val"),
+        F.when(message_type == "update", F.col("value") - 1.0)
+        .otherwise(F.lit(None).cast("double"))
+        .alias("before_val"),
     )
-    is_heartbeat = F.col("database") == HEARTBEAT_DB
 
-    return (
-        events.withColumn("database", database)
-        .withColumn(
-            "table",
-            F.when(is_heartbeat, F.lit(HEARTBEAT_TABLE))
-            .when(
-                F.col("event_id") % 13 == 0,
-                F.concat(F.col("event_type"), F.lit(REFRESH_SUFFIX)),
-            )
-            .otherwise(F.col("event_type")),
-        )
-        .withColumn("message_type", message_type_column())
-        .withColumn(
-            "log_file",
-            F.concat(
-                F.lit("binlog."),
-                F.lpad(F.expr("event_id div 1000").cast("string"), 6, "0"),
-            ),
-        )
-        .withColumn("log_pos", (F.col("event_id") % 1000) * 4 + 4)
-        .withColumn("offset", F.lit(0))
-        .withColumn("pk", F.col("user_id"))
-        .withColumn("payload_k", F.get_json_object("props", "$.k").cast("int"))
-        .withColumn("payload_val", F.col("value"))
-        .withColumn(
-            "before_val",
-            F.when(
-                F.col("message_type") == "update", F.col("value") - 1.0
-            ).otherwise(F.lit(None).cast("double")),
-        )
-        .withColumnRenamed("ts", "timestamp")
-        .select(*CDC_EVENT_COLUMNS)
-    )
+
+def events_as_cdc(events: DataFrame) -> DataFrame:
+    """events(event_id, ts, user_id, event_type, value, props) -> CDC shape."""
+    return events.select(*cdc_columns())
 
 
 def events_as_multirow_cdc(events: DataFrame) -> DataFrame:

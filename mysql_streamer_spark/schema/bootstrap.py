@@ -12,14 +12,17 @@ had a positional dense_rank competing with the registry).
 
 Everything here is driver-side control-plane work on a handful of
 statements; the 100 TB data plane only ever sees the tiny broadcast
-dimension DataFrame.
+dimension DataFrame, a JVM-local relation (``tables.local_frame``) that
+no Python task ever scans.
 """
 
 from __future__ import annotations
 
 from functools import lru_cache
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from mysql_streamer_spark.cdc.filters import (
     DEFAULT_SCHEMA_BLACKLIST,
@@ -28,6 +31,7 @@ from mysql_streamer_spark.cdc.filters import (
 from mysql_streamer_spark.cdc.source import MESSAGE_TYPE_MAP
 from mysql_streamer_spark.schema.ddl_parser import StatementKind, parse_statement
 from mysql_streamer_spark.schema.registry import SchemaRegistry
+from mysql_streamer_spark.tables import local_frame
 
 #: The CDC fixture's table universe: db_0/db_1 x one table per event type
 #: (cdc/source.py mapping). Lexicographic order fixes registration order.
@@ -108,10 +112,23 @@ def registry_dim_rows() -> list[tuple[str, str, int]]:
     ]
 
 
+#: applicationId -> the registry dimension frame. The registry is a
+#: process-wide ``lru_cache`` (bootstrap_registry), so the frame never goes
+#: stale; caching it keeps its build off every micro-batch.
+_DIM_CACHE: dict[str, DataFrame] = {}
+_DIM_SCHEMA = pa.schema(
+    [("database", pa.string()), ("table", pa.string()), ("schema_id", pa.int32())]
+)
+
+
 def registry_dim_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        registry_dim_rows(), schema="database string, table string, schema_id int"
-    )
+    """(database, table, schema_id) as a JVM-local relation, one per
+    application: the envelope's broadcast side runs no Python task."""
+    app = spark.sparkContext.applicationId
+    dim = _DIM_CACHE.get(app)
+    if dim is None:
+        dim = _DIM_CACHE[app] = local_frame(spark, registry_dim_rows(), _DIM_SCHEMA)
+    return dim
 
 
 def schemas_values_sql() -> str:
@@ -159,22 +176,32 @@ def versioned_dim_rows() -> list[tuple[str, str, int, int, str, str | None]]:
     return rows
 
 
-def versioned_dim_df(spark: SparkSession) -> DataFrame:
-    df = spark.createDataFrame(
-        versioned_dim_rows(),
-        schema="database string, table string, version int, schema_id int, "
-        "eff_ts string, eff_end string",
-    )
-    from pyspark.sql import functions as F
+#: versioned_dim_rows' columns, eff_ts/eff_end as "%Y-%m-%d %H:%M:%S" strings
+_INTERVAL_SCHEMA = pa.schema(
+    [
+        ("database", pa.string()),
+        ("table", pa.string()),
+        ("version", pa.int32()),
+        ("schema_id", pa.int32()),
+        ("eff_ts", pa.string()),
+        ("eff_end", pa.string()),
+    ]
+)
 
-    return df.select(
-        "database",
-        "table",
-        "version",
-        "schema_id",
-        F.to_timestamp("eff_ts").alias("eff_ts"),
-        F.to_timestamp("eff_end").alias("eff_end"),
+
+def interval_dim_df(
+    spark: SparkSession, rows: list[tuple[str, str, int, int, str, str | None]]
+) -> DataFrame:
+    """Interval rows (versioned_dim_rows' shape) -> the typed version
+    dimension (database, table, version, schema_id, eff_ts, eff_end), as a
+    JVM-local relation."""
+    return local_frame(spark, rows, _INTERVAL_SCHEMA).withColumns(
+        {"eff_ts": F.to_timestamp("eff_ts"), "eff_end": F.to_timestamp("eff_end")}
     )
+
+
+def versioned_dim_df(spark: SparkSession) -> DataFrame:
+    return interval_dim_df(spark, versioned_dim_rows())
 
 
 def versioned_dim_values_sql() -> str:

@@ -37,6 +37,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -45,10 +46,10 @@ from mysql_streamer_spark.cdc.source import (
     REFRESH_SUFFIX,
     events_as_cdc,
 )
-from mysql_streamer_spark.schema.bootstrap import versioned_dim_rows
+from mysql_streamer_spark.schema.bootstrap import interval_dim_df, versioned_dim_rows
 from mysql_streamer_spark.storage import atomic_write_json, read_json
 from mysql_streamer_spark.streaming.runner import drain, write_sink_batch
-from mysql_streamer_spark.tables import load_table
+from mysql_streamer_spark.tables import load_table, local_frame
 
 #: feed schema shared by QueryEvents and DataEvents (version/schema_id are
 #: NULL on data rows; ts is the binlog-clock instant for both)
@@ -66,6 +67,19 @@ FEED_BOUNDARIES = (
     "2024-01-10 00:00:00",
     "2024-01-13 00:00:00",
     "2024-01-20 00:00:00",
+)
+
+
+#: ddl_query_event_rows' columns, ts as its "%Y-%m-%d %H:%M:%S" string
+_DDL_ROW_SCHEMA = pa.schema(
+    [
+        ("kind", pa.string()),
+        ("database", pa.string()),
+        ("table", pa.string()),
+        ("ts", pa.string()),
+        ("version", pa.int32()),
+        ("schema_id", pa.int32()),
+    ]
 )
 
 
@@ -109,14 +123,9 @@ def stage_barrier_feed(spark: SparkSession, sf_dir: str, src_dir: str) -> int:
         F.lit(None).cast("int").alias("version"),
         F.lit(None).cast("int").alias("schema_id"),
     )
-    ddl = spark.createDataFrame(
-        [
-            (k, db, t, eff, v, sid)
-            for k, db, t, eff, v, sid in ddl_query_event_rows()
-        ],
-        "kind string, database string, table string, ts string, "
-        "version int, schema_id int",
-    ).withColumn("ts", F.to_timestamp("ts"))
+    ddl = local_frame(spark, ddl_query_event_rows(), _DDL_ROW_SCHEMA).withColumn(
+        "ts", F.to_timestamp("ts")
+    )
     feed = dml.unionByName(ddl)
 
     # one scan, one job: each ts-range lands in its own chunk=i partition
@@ -150,18 +159,10 @@ def dim_from_interval_rows(
     spark: SparkSession,
     rows: list[tuple[str, str, int, int, str, str | None]],
 ) -> DataFrame:
-    """Interval rows -> the typed version dimension frame."""
-    return spark.createDataFrame(
-        rows,
-        "database string, table string, version int, schema_id int, "
-        "eff_ts string, eff_end string",
-    ).select(
-        F.col("database").alias("d_db"),
-        F.col("table").alias("d_table"),
-        "version",
-        "schema_id",
-        F.to_timestamp("eff_ts").alias("eff_ts"),
-        F.to_timestamp("eff_end").alias("eff_end"),
+    """Interval rows -> the typed version dimension frame, a JVM-local
+    relation (no Python task scans it)."""
+    return interval_dim_df(spark, rows).withColumnsRenamed(
+        {"database": "d_db", "table": "d_table"}
     )
 
 

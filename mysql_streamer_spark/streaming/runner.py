@@ -80,13 +80,25 @@ ROCKSDB_PROVIDER = (
 STATE_PARTITIONS = 8
 
 
+#: (applicationId, source_dir) -> the events schema read by the first
+#: load_events_stream on that directory. The peek is a footer-read job over
+#: the whole (growing) directory; a stream's files all share one schema, so
+#: every later drain of the application reuses it. A failed peek (an empty
+#: or missing directory) raises and caches nothing.
+_SCHEMA_CACHE: dict[tuple[str, str], StructType] = {}
+
+
 def load_events_stream(
     spark: SparkSession, source_dir: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
     """readStream over an events parquet directory (schema inferred from a
-    batch peek; ts arrives as parquet TIMESTAMP(NANOS) -> long -> µs)."""
+    batch peek, once per application and directory; ts arrives as parquet
+    TIMESTAMP(NANOS) -> long -> µs)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(source_dir).schema
+    key = (spark.sparkContext.applicationId, source_dir)
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is None:
+        schema = _SCHEMA_CACHE[key] = spark.read.parquet(source_dir).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)

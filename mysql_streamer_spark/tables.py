@@ -8,10 +8,14 @@ documents embeddings — one parquet file per table under
 from __future__ import annotations
 
 import os
-from collections.abc import Iterable
+from collections.abc import Iterable, Sequence
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 TABLE_NAMES = (
     "region",
@@ -72,6 +76,25 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = normalize_timestamps(spark.read.parquet(table_path(sf_dir, name)), ts_cols)
     _PLAN_CACHE[cache_key] = df
     return df
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[tuple], schema: "pa.Schema"
+) -> DataFrame:
+    """A small driver-side row list (a dimension, a handful of DDL rows) as
+    a JVM-local relation. ``createDataFrame`` over a list goes through a
+    Python RDD (``Scan ExistingRDD``), which starts Python worker tasks
+    every time the frame is scanned; from a ``pyarrow.Table`` it plans as
+    ``LocalTableScan`` and no Python worker runs. ``schema`` is the
+    pyarrow schema of ``rows``' columns (strings, int32 -> Spark int)."""
+    import pyarrow as pa
+
+    columns = list(zip(*rows)) if rows else [()] * len(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=field.type) for col, field in zip(columns, schema)],
+        schema=schema,
+    )
+    return spark.createDataFrame(table)
 
 
 def normalize_timestamps(df: DataFrame, ts_cols: Iterable[str]) -> DataFrame:

@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
+import importlib
 import importlib.util
+import sys
 import zipfile
 import zipimport
 
@@ -97,3 +99,16 @@ def test_session_workers_run_under_the_package_daemon(spark):
     assert conf.get("spark.python.daemon.module") == DAEMON
     # the daemon must start whatever the driver's working directory
     assert conf.get("spark.executorEnv.PYTHONPATH") == session._PACKAGE_ROOT
+
+
+def test_daemon_stamps_its_importers_before_forking(tmp_path, directory_reads, monkeypatch):
+    """What the daemon runs before forking stamps every importer it holds,
+    so a forked worker's first ``invalidate_caches()`` (one per task) reads
+    no unchanged archive."""
+    archive = str(tmp_path / "lib.zip")
+    _write_zip(archive, {"mod_a": "X = 1\n"})
+    monkeypatch.setitem(sys.path_importer_cache, archive, zipimport.zipimporter(archive))
+    pyworker.prepare_worker_imports()
+    directory_reads.clear()
+    importlib.invalidate_caches()  # a forked worker's first task
+    assert directory_reads.count(archive) == 0

@@ -7,8 +7,6 @@ topic-offset merge is idempotent per batch id."""
 from __future__ import annotations
 
 import os
-import time
-import uuid
 
 import pytest
 
@@ -57,52 +55,31 @@ def _reference_aggregate(df):
     ).collect()
 
 
-def _spark_jobs(spark, fn) -> int:
-    """Spark jobs launched by ``fn()``, counted under a private job group.
-    A marker job in a second group runs afterwards: the listener bus is
-    FIFO, so once the marker is visible every job before it is counted."""
-    sc = spark.sparkContext
-    group, marker = f"g-{uuid.uuid4().hex}", f"m-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "counted")
-    try:
-        fn()
-    finally:
-        sc.setJobGroup(marker, "marker")
-        spark.range(1).collect()
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    tracker = sc.statusTracker()
-    deadline = time.time() + 30
-    while not tracker.getJobIdsForGroup(marker):
-        assert time.time() < deadline, "marker job never reached the status store"
-        time.sleep(0.05)
-    return len(tracker.getJobIdsForGroup(group))
-
-
-def test_state_io_launches_no_spark_job(spark, batch, tmp_path):
+def test_state_io_launches_no_spark_job(spark_jobs, batch, tmp_path):
     state = str(tmp_path / "state")
     pos = LogPosition(log_file="mysql-bin.000002", log_pos=40, offset=1)
-    assert _spark_jobs(spark, lambda: state_table.advance_state(
+    assert spark_jobs(lambda: state_table.advance_state(
         state, "c", pos, 0)) == 0
-    assert _spark_jobs(spark, lambda: state_table.advance_state(
+    assert spark_jobs(lambda: state_table.advance_state(
         state, "c", pos, 1)) == 0
-    assert _spark_jobs(spark, lambda: state_table.save_state(
+    assert spark_jobs(lambda: state_table.save_state(
         state, "c", pos, 2)) == 0
-    assert _spark_jobs(spark, lambda: state_table.load_state(state, "c")) == 0
+    assert spark_jobs(lambda: state_table.load_state(state, "c")) == 0
 
     # batch_position: exactly the jobs of one grouped aggregate over the batch
-    n_agg = _spark_jobs(spark, lambda: _reference_aggregate(batch))
+    n_agg = spark_jobs(lambda: _reference_aggregate(batch))
     assert n_agg >= 1
     result = []
-    assert _spark_jobs(
-        spark, lambda: result.append(state_table.batch_position(batch))
+    assert spark_jobs(
+        lambda: result.append(state_table.batch_position(batch))
     ) == n_agg
     marks = result[0][1]
     # save_topic_offsets and load_topic_offsets: none (the first save, and a
     # second that merges into saved offsets)
     for batch_id in (0, 1):
-        assert _spark_jobs(spark, lambda: state_table.save_topic_offsets(
+        assert spark_jobs(lambda: state_table.save_topic_offsets(
             marks, state, batch_id)) == 0
-    assert _spark_jobs(spark, lambda: state_table.load_topic_offsets(state)) == 0
+    assert spark_jobs(lambda: state_table.load_topic_offsets(state)) == 0
 
 
 def test_state_is_json_under_state_dir(tmp_path):
@@ -152,7 +129,7 @@ def test_truncated_state_raises_instead_of_resetting(batch, tmp_path):
         state_table.save_topic_offsets(marks, state, 1)
 
 
-def test_readback_and_position_run_only_the_aggregate(spark, tmp_path):
+def test_readback_and_position_run_only_the_aggregate(spark, spark_jobs, tmp_path):
     """A batch read back under the schema it was written with runs no
     footer-inference job, so the read-back and the position together launch
     only the jobs of the one aggregate, and the position is the max row."""
@@ -162,14 +139,14 @@ def test_readback_and_position_run_only_the_aggregate(spark, tmp_path):
     written = spark.createDataFrame(TOPIC_ROWS, TOPIC_SCHEMA)
     runner.write_sink_batch(written, out, 0)
     reference = spark.read.parquet(f"{out}/batch_id=0")  # inference runs here
-    n_agg = _spark_jobs(spark, lambda: _reference_aggregate(reference))
+    n_agg = spark_jobs(lambda: _reference_aggregate(reference))
     result = []
 
     def readback_and_position():
         committed = runner.read_sink_batch(spark, out, 0, written.schema)
         result.append(state_table.batch_position(committed))
 
-    assert _spark_jobs(spark, readback_and_position) == n_agg
+    assert spark_jobs(readback_and_position) == n_agg
     assert result == [(
         LogPosition(log_file="mysql-bin.000002", log_pos=4, offset=1),
         {"db.users": (30, 2), "db.orders": (20, 1)},
