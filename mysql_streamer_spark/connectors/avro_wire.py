@@ -25,11 +25,18 @@ through one driver pair under ``mapInArrow`` (Arrow batch transfer, no
 row-at-a-time Python UDF serialization). The envelope's wire layout is
 decided once, here: ``_flat_frame`` selects what an encoder reads
 (``timestamp`` as int64 micros), ``_meta_for_row`` builds every
-transaction-id meta array, ``_encode_map`` runs a per-row encode,
-``_decode_map`` runs a ``bytes -> records`` function (a frame yields one
-record, an OCF blob many), and ``_decode_envelopes`` turns each envelope
-record into output columns derived from its Avro schema (``meta`` becomes
-the ``meta_ok`` witness, ``timestamp`` becomes ``ts_us``).
+transaction-id meta array, ``_encode_map`` runs a batch kernel (Arrow batch
+-> one binary array), ``_decode_map`` runs a ``bytes -> records`` function
+(a frame yields one record, an OCF blob many), and ``_decode_envelopes``
+turns each envelope record into output columns derived from its Avro schema
+(``meta`` becomes the ``meta_ok`` witness, ``timestamp`` becomes ``ts_us``).
+
+Two batch kernels feed ``_encode_map``. The per-table payload publish
+(``payload_to_confluent``) compiles each registry schema once into a field
+plan and encodes whole batches with numpy (``_payload_kernel``: a
+fixed-width byte matrix plus mask per plan group, no per-row Python step).
+The nested envelope, secure and GTID codecs run their ``compile_encoder``
+row loop through ``_row_kernel``.
 
 This Python kernel is the codec on every deployment. Correctness is proven
 three ways: unit tests pin the spec's own byte examples (zigzag vectors,
@@ -44,8 +51,10 @@ from __future__ import annotations
 
 import json
 import struct
-from functools import partial
+from functools import lru_cache, partial
 from typing import Any, Iterator
+
+import numpy as np
 
 #: The meta record, field-for-field the reference's
 #: log_transaction_id_v1.avsc (log_pos is ``int`` there — binlog offsets are
@@ -738,24 +747,20 @@ def _flat_frame(df, names: list[str], *more):
     )
 
 
-def _encode_map(flat, encode_row, keys: tuple[str, ...] = ()):
+def _encode_map(flat, encode, keys: tuple[str, ...] = ()):
     """The one encode driver: flat frame -> one ``value: binary`` message per
-    row, ``encode_row(row, out)`` appending a row's message to ``out`` (the
-    compile_encoder convention). The ``keys`` columns of the frame ride
-    alongside, ahead of ``value``. Arrow batch in, Python encode loop,
-    Arrow batch out — map-side only, no shuffle."""
+    row, ``encode(batch)`` returning a batch's messages as one Arrow binary
+    array in row order (a batch kernel; a per-row compile_encoder loop rides
+    in through _row_kernel). The ``keys`` columns of the frame ride
+    alongside, ahead of ``value``. Arrow batch in, Arrow batch out —
+    map-side only, no shuffle."""
     import pyarrow as pa
     from pyspark.sql.types import BinaryType, StructField, StructType
 
     def encode_batches(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         for batch in batches:
-            out = []
-            for row in batch.to_pylist():
-                buf = bytearray()
-                encode_row(row, buf)
-                out.append(bytes(buf))
             yield pa.RecordBatch.from_arrays(
-                [*(batch.column(k) for k in keys), pa.array(out, pa.binary())],
+                [*(batch.column(k) for k in keys), encode(batch)],
                 [*keys, "value"],
             )
 
@@ -764,6 +769,24 @@ def _encode_map(flat, encode_row, keys: tuple[str, ...] = ()):
         + [StructField("value", BinaryType())]
     )
     return flat.mapInArrow(encode_batches, schema)
+
+
+def _row_kernel(encode_row):
+    """A per-row ``encode_row(row, out)`` (the compile_encoder convention,
+    appending a row's message to ``out``) as an _encode_map batch kernel:
+    one message per row of ``batch.to_pylist()``."""
+
+    def encode(batch):
+        import pyarrow as pa
+
+        out = []
+        for row in batch.to_pylist():
+            buf = bytearray()
+            encode_row(row, buf)
+            out.append(bytes(buf))
+        return pa.array(out, pa.binary())
+
+    return encode
 
 
 def _encode_envelopes(df, record: dict, meta_version: int):
@@ -775,7 +798,7 @@ def _encode_envelopes(df, record: dict, meta_version: int):
         row["meta"] = _meta_for_row(row, meta_version)
         enc(row, out)
 
-    return _encode_map(_flat_frame(df, _flat_names(record)), encode_row)
+    return _encode_map(_flat_frame(df, _flat_names(record)), _row_kernel(encode_row))
 
 
 def _decode_frame(dec, raw: bytes, pos: int = 0) -> dict:
@@ -996,7 +1019,7 @@ def envelope_to_confluent(env):
         _flat_names(ENVELOPE_SCHEMA),
         F.col("wire_schema_id").cast("int").alias("wire_schema_id"),
     )
-    return _encode_map(flat, encode_row)
+    return _encode_map(flat, _row_kernel(encode_row))
 
 
 def confluent_to_envelope(wire):
@@ -1063,6 +1086,169 @@ def registry_payload_schemas() -> dict[int, dict]:
 #: envelope value and publish as their null branch)
 _PAYLOAD_FIELD_MAP = {"pk": "pk", "k": "payload_k", "val": "payload_val"}
 
+#: Avro base type -> the batch kernel's field kind (``timestamp-micros``
+#: and other logical longs ride on ``long``)
+_PLAN_KINDS = {"int": "long", "long": "long", "double": "double"}
+
+
+def _field_plan(schema: dict, columns: dict[str, str]) -> tuple:
+    """A record schema -> the batch kernel's field plan: per field, in
+    schema order, ``(field, kind, column, null_branch, value_branch)``.
+
+    ``kind`` is ``long`` (zigzag varint) or ``double`` (8 bytes
+    little-endian), read from the ``columns[field]`` column, with the branch
+    indices of an optional ``["null", T]``/``[T, "null"]`` field (None for a
+    plain one); a nullable field with no column is ``null``, its null branch
+    on every row. Any other shape raises here, when the plan is built, not
+    on the first row that reaches it."""
+    plan = []
+    for f in schema["fields"]:
+        name, t, column = f["name"], f["type"], columns.get(f["name"])
+        null_branch = value_branch = None
+        if isinstance(t, list) and "null" in t:
+            null_branch = t.index("null")
+            rest = [(i, b) for i, b in enumerate(t) if i != null_branch]
+            if len(rest) == 1:
+                value_branch, t = rest[0]
+        if column is None and null_branch is not None:
+            plan.append((name, "null", None, null_branch, None))
+            continue
+        kind = _PLAN_KINDS.get(_type_name(t)) if column else None
+        if kind is None:
+            raise ValueError(
+                f"{schema.get('name')}.{name}: {f['type']!r} "
+                f"{'over column ' + repr(column) if column else 'with no column'} "
+                "is outside the batch plan kinds (long, double, their optional "
+                "forms, null-only)"
+            )
+        plan.append((name, kind, column, null_branch, value_branch))
+    return tuple(plan)
+
+
+@lru_cache(maxsize=1)
+def _payload_plans():
+    """Every registry payload schema's field plan, built once per process
+    (the registry is bootstrap_registry's process-wide cache): the distinct
+    plans, and a read-only ``schema_id -> plan index`` table (-1 where no
+    schema is registered). Ids sharing a plan encode as one group."""
+    schemas = registry_payload_schemas()
+    plans: dict[tuple, int] = {}
+    lut = np.full(max(schemas) + 1, -1, np.int32)
+    for sid, schema in schemas.items():
+        lut[sid] = plans.setdefault(_field_plan(schema, _PAYLOAD_FIELD_MAP), len(plans))
+    lut.flags.writeable = False
+    return tuple(plans), lut
+
+
+#: bit offsets of a 64-bit varint's ten 7-bit groups
+_VARINT_SHIFTS = np.arange(10, dtype=np.uint64) * np.uint64(7)
+
+
+def _varint_cells(v, width: int):
+    """Zigzag base-128 varints of ``v`` (int64) as ``(cells, present)``, two
+    ``(len(v), width)`` matrices: byte ``j`` of row ``i``'s varint and
+    whether the varint has one (``width`` 5 fits any int32, 10 any int64)."""
+    z = ((v << 1) ^ (v >> 63)).view(np.uint64)
+    groups = z[:, None] >> _VARINT_SHIFTS[:width]
+    present = groups != 0
+    present[:, 0] = True
+    more = (groups > 0x7F).astype(np.uint8) << 7
+    return (groups & 0x7F).astype(np.uint8) | more, present
+
+
+def _field_cells(kind: str, values, valid, null_branch, value_branch):
+    """One plan field's ``(cells, present)`` over a group's rows: for an
+    optional field the union branch byte (a two-branch union's index is one
+    varint byte) ahead of the value bytes, which are present only where
+    ``valid``."""
+    n = len(valid)
+    if kind == "null":
+        return np.full((n, 1), 2 * null_branch, np.uint8), np.ones((n, 1), bool)
+    if kind == "long":
+        if values.dtype.kind not in "iu":
+            raise TypeError(f"long field over a {values.dtype} column")
+        cells, present = _varint_cells(
+            values.astype(np.int64, copy=False), 5 if values.dtype.itemsize <= 4 else 10
+        )
+    else:
+        cells = values.astype("<f8", copy=False).view(np.uint8).reshape(n, 8)
+        present = np.ones(cells.shape, bool)
+    if null_branch is None:
+        return cells, present
+    branch = np.where(valid, 2 * value_branch, 2 * null_branch).astype(np.uint8)
+    return (
+        np.concatenate([branch[:, None], cells], axis=1),
+        np.concatenate([np.ones((n, 1), bool), present & valid[:, None]], axis=1),
+    )
+
+
+def _column_values(batch, name: str):
+    """A batch column as ``(values, valid)`` numpy arrays, nulls zeroed."""
+    import pyarrow.compute as pc
+
+    col = batch.column(name)
+    valid = np.ones(len(col), bool)
+    if col.null_count:
+        valid = col.is_valid().to_numpy(zero_copy_only=False)
+        col = pc.fill_null(col, 0)
+    return col.to_numpy(zero_copy_only=False), valid
+
+
+def _payload_kernel(plans: tuple, lut, batch):
+    """The per-table payload batch kernel: each row's Confluent frame
+    (magic, big-endian ``schema_id``, then the body its plan encodes) as
+    one Arrow binary array in row order. Rows are encoded per plan group
+    into one fixed-width byte matrix plus a mask of the bytes each message
+    uses; the masked bytes in row-major order are the array's values and
+    the mask's row sums its lengths — no per-row Python step."""
+    import pyarrow as pa
+
+    n = batch.num_rows
+    sids = _column_values(batch, "schema_id")[0].astype(np.int64, copy=False)
+    group = np.full(n, -1, np.int32)
+    known = (sids >= 0) & (sids < len(lut))
+    group[known] = lut[sids[known]]
+    if (group < 0).any():
+        bad = sorted(set(sids[group < 0].tolist()))
+        raise ValueError(f"schema ids {bad} are not registered")
+    used = {c for plan in plans for _, _, c, _, _ in plan if c}
+    columns = {c: _column_values(batch, c) for c in used}
+    columns[None] = (np.zeros(n, np.int8), np.ones(n, bool))  # null-only fields
+    groups = np.flatnonzero(np.bincount(group, minlength=len(plans)))
+    parts = []  # (rows, [(cells, present), ...]) per plan group
+    for g in groups:
+        rows = slice(None) if len(groups) == 1 else np.flatnonzero(group == g)
+        fields = []
+        for field, kind, column, null_branch, value_branch in plans[g]:
+            values, valid = columns[column]
+            valid = valid[rows]
+            if null_branch is None and not valid.all():
+                raise ValueError(f"null in non-null field {field!r}")
+            fields.append(
+                _field_cells(kind, values[rows], valid, null_branch, value_branch)
+            )
+        parts.append((rows, fields))
+    width = 5 + max((sum(c.shape[1] for c, _ in f) for _, f in parts), default=0)
+    cells = np.zeros((n, width), np.uint8)
+    present = np.zeros((n, width), bool)
+    cells[:, 1:5] = sids.astype(">u4").view(np.uint8).reshape(n, 4)  # magic 0x00
+    present[:, :5] = True
+    for rows, fields in parts:
+        at = 5
+        for c, p in fields:
+            cells[rows, at : at + c.shape[1]] = c
+            present[rows, at : at + c.shape[1]] = p
+            at += c.shape[1]
+    offsets = np.zeros(n + 1, np.int64)
+    np.cumsum(present.sum(axis=1), out=offsets[1:])
+    if offsets[-1] > np.iinfo(np.int32).max:
+        raise ValueError("batch messages exceed the 2 GiB binary array limit")
+    return pa.Array.from_buffers(
+        pa.binary(),
+        n,
+        [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(cells[present])],
+    )
+
 
 def payload_to_confluent(env):
     """Envelope -> Confluent-framed PER-TABLE payload messages: each row's
@@ -1075,31 +1261,18 @@ def payload_to_confluent(env):
     window) cannot be published by a strict producer and are filtered,
     exactly like the reference blocking on registration.
 
-    Scale shape: map-only over the envelope partitioning; one encoder per
-    registered schema, compiled once and shipped with the task."""
+    Scale shape: map-only over the envelope partitioning; the encode is
+    _payload_kernel over field plans built once per process
+    (_payload_plans) and shipped with the task, so a micro-batch compiles
+    nothing."""
     from pyspark.sql import functions as F
-
-    encoders = {
-        sid: (
-            _confluent_header(sid),
-            compile_encoder(schema),
-            [f["name"] for f in schema["fields"]],
-        )
-        for sid, schema in registry_payload_schemas().items()
-    }
-
-    def encode_row(row: dict, out: bytearray) -> None:
-        head, enc, names = encoders[row["schema_id"]]
-        out += head
-        enc(
-            {name: row.get(_PAYLOAD_FIELD_MAP.get(name, "\x00missing")) for name in names},
-            out,
-        )
 
     flat = env.filter(F.col("schema_id").isNotNull()).select(
         "schema_id", "txn_order", "pk", "payload_k", "payload_val"
     )
-    return _encode_map(flat, encode_row, keys=("txn_order",))
+    return _encode_map(
+        flat, partial(_payload_kernel, *_payload_plans()), keys=("txn_order",)
+    )
 
 
 def confluent_payload_decode(

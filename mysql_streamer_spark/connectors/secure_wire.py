@@ -56,6 +56,7 @@ from mysql_streamer_spark.connectors.avro_wire import (
     _flat_frame,
     _flat_names,
     _meta_for_row,
+    _row_kernel,
     compile_decoder,
     compile_encoder,
 )
@@ -141,7 +142,7 @@ def seal_to_avro(
         row["meta"] = _meta_for_row(row, meta_version=1)
         enc(row, out)
 
-    return _encode_map(flat, encode_row)
+    return _encode_map(flat, _row_kernel(encode_row))
 
 
 def avro_open_secure_envelope(wire: DataFrame, config_or_ring) -> DataFrame:

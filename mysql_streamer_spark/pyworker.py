@@ -16,7 +16,12 @@ stat fails. A replaced or added zip (``addPyFile``) is still seen. The
 daemon stamps its importers once before it forks, so no worker re-reads an
 unchanged archive.
 
-Imports only the stdlib and ``pyspark.daemon``: it starts before any task.
+Spark puts ``pyspark.zip`` (which holds no ``.pyc`` files) ahead of
+site-packages on the worker path, so every module a worker imports from it
+is compiled from source. Before forking, the daemon also imports what every
+Arrow task's worker needs (``PRELOADED``); forked workers inherit the
+loaded modules instead of each importing (and, for PySpark's, compiling)
+them on its first task.
 """
 
 from __future__ import annotations
@@ -47,11 +52,26 @@ def install_stat_checked_zip_invalidation() -> None:
     zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
+#: modules an Arrow task's worker imports (``mapInArrow``, pandas UDFs):
+#: the batch kernels' numpy, and pandas, which pyarrow imports on a worker's
+#: first numpy conversion (``to_numpy``, ``pa.array``)
+PRELOADED = (
+    "numpy",
+    "pandas",
+    "pyarrow",
+    "pyspark.worker",
+    "pyspark.sql.pandas.serializers",
+)
+
+
 def prepare_worker_imports() -> None:
-    """On CPython < 3.12: install the stat-checked invalidation, then stamp
-    every importer the daemon holds with one ``invalidate_caches()``. Forked
-    workers inherit the stamps, so their first task's invalidation reads no
+    """Import ``PRELOADED``, then, on CPython < 3.12, install the
+    stat-checked invalidation and stamp every importer the daemon holds
+    with one ``invalidate_caches()``. Forked workers inherit both, so their
+    first task imports none of those modules and its invalidation reads no
     archive (unstamped, each worker re-read all of them once, ~0.12 s)."""
+    for name in PRELOADED:
+        importlib.import_module(name)
     if sys.version_info < (3, 12):
         install_stat_checked_zip_invalidation()
         importlib.invalidate_caches()

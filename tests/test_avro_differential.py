@@ -10,7 +10,9 @@ is an independent implementation: property-generated (schema, value) pairs
 are encoded by BOTH the in-house kernel and Java's GenericDatumWriter (fed
 through the Avro JSON encoding, so no Python code touches the Java bytes)
 and must agree BYTE-FOR-BYTE; the Java bytes are then decoded by the
-in-house decoder and must reproduce the value exactly."""
+in-house decoder and must reproduce the value exactly. The per-table
+payload publish's numpy batch kernel is held to both partners: its frames
+equal the compile_encoder row path's and Java's."""
 
 from __future__ import annotations
 
@@ -18,16 +20,21 @@ import json
 import math
 import struct
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 
 # --- Java-side reference codec (via the Spark JVM) ------------------------
 
-def _java_encode(spark, schema_json: str, avro_json_value: str) -> bytes:
+def _java_encode(
+    spark, schema_json: str, avro_json_value: str, doubles: dict | None = None
+) -> bytes:
     """Avro-JSON -> binary, entirely inside the Apache Avro Java library:
     jsonDecoder parses the canonical JSON form, GenericDatumWriter +
-    directBinaryEncoder emit the binary encoding."""
+    directBinaryEncoder emit the binary encoding. ``doubles`` are top-level
+    fields put into the parsed record afterwards as Java doubles: JSON has
+    no NaN or infinity."""
     jvm = spark._jvm
     schema = jvm.org.apache.avro.Schema.Parser().parse(schema_json)
     decoder = jvm.org.apache.avro.io.DecoderFactory.get().jsonDecoder(
@@ -35,6 +42,8 @@ def _java_encode(spark, schema_json: str, avro_json_value: str) -> bytes:
     )
     reader = jvm.org.apache.avro.generic.GenericDatumReader(schema)
     rec = reader.read(None, decoder)
+    for name, value in (doubles or {}).items():
+        rec.put(name, value)
     baos = jvm.java.io.ByteArrayOutputStream()
     enc = jvm.org.apache.avro.io.EncoderFactory.get().directBinaryEncoder(
         baos, None
@@ -452,3 +461,204 @@ def test_confluent_frame_resolution_matches_java(spark):
     assert ours["meta"][0]["log_pos"] == jm.get("log_pos")
     assert isinstance(ours["meta"][0]["log_pos"], int)
     assert str(jm.get("log_file")) == ours["meta"][0]["log_file"]
+
+
+# --- the per-table payload batch kernel ------------------------------------
+
+def _payload_schema():
+    """The columns payload_to_confluent's kernel reads, with the envelope's
+    types."""
+    import pyarrow as pa
+
+    return pa.schema(
+        [
+            ("schema_id", pa.int32()),
+            ("txn_order", pa.int64()),
+            ("pk", pa.int64()),
+            ("payload_k", pa.int32()),
+            ("payload_val", pa.float64()),
+        ]
+    )
+
+
+def _payload_batch(rows):
+    """Payload rows, tuples in _payload_schema's column order, as one Arrow
+    batch."""
+    import pyarrow as pa
+
+    schema = _payload_schema()
+    return pa.RecordBatch.from_pylist(
+        [dict(zip(schema.names, row)) for row in rows], schema=schema
+    )
+
+
+def _payload_record(schema, row) -> dict:
+    """A payload row as its table schema's record: columns absent from the
+    envelope are null."""
+    from mysql_streamer_spark.connectors.avro_wire import _PAYLOAD_FIELD_MAP
+
+    return {
+        f["name"]: row.get(_PAYLOAD_FIELD_MAP.get(f["name"], ""))
+        for f in schema["fields"]
+    }
+
+
+def _payload_row_path(schemas, row) -> bytes:
+    """One row's frame the per-row way: header + compile_encoder of the
+    row's table schema."""
+    from mysql_streamer_spark.connectors.avro_wire import (
+        _confluent_header,
+        compile_encoder,
+    )
+
+    schema = schemas[row["schema_id"]]
+    out = bytearray(_confluent_header(row["schema_id"]))
+    compile_encoder(schema)(_payload_record(schema, row), out)
+    return bytes(out)
+
+
+def _payload_kernel_bytes(rows) -> list:
+    from mysql_streamer_spark.connectors.avro_wire import (
+        _payload_kernel,
+        _payload_plans,
+    )
+
+    return _payload_kernel(*_payload_plans(), _payload_batch(rows)).to_pylist()
+
+
+_I32 = (-(2**31), 2**31 - 1)
+_I64 = (-(2**63), 2**63 - 1)
+_SUBNORMALS = (5e-324, -5e-324, 2.2250738585072009e-308)
+
+
+def _canonical_nan(x: float) -> float:
+    """py4j hands Java every NaN as Double.NaN, so the doubles drawn carry
+    that one NaN."""
+    return math.nan if math.isnan(x) else x
+
+
+_DOUBLES = st.floats().map(_canonical_nan) | st.sampled_from(
+    (-0.0, 0.0, math.nan, math.inf, -math.inf, *_SUBNORMALS)
+)
+
+
+@st.composite
+def _payload_rows(draw, max_rows: int = 12):
+    from mysql_streamer_spark.connectors.avro_wire import registry_payload_schemas
+
+    ids = sorted(registry_payload_schemas())
+    n = draw(st.integers(1, max_rows))
+    return [
+        (
+            draw(st.sampled_from(ids)),
+            i,
+            draw(st.integers(*_I64) | st.sampled_from(_I64 + (0, -1))),
+            draw(st.none() | st.integers(*_I32) | st.sampled_from(_I32)),
+            draw(st.none() | _DOUBLES),
+        )
+        for i in range(n)
+    ]
+
+
+def _java_payload_frame(spark, schemas, row) -> bytes:
+    """One row's frame with the body encoded by Apache Avro Java."""
+    from mysql_streamer_spark.connectors.avro_wire import _confluent_header
+
+    schema = schemas[row["schema_id"]]
+    record = _payload_record(schema, row)
+    doubles = {}
+    val = record["val"]
+    if val is not None and not math.isfinite(val):
+        doubles["val"], record["val"] = val, 0.0
+    body = _java_encode(
+        spark, json.dumps(schema), json.dumps(_to_avro_json(schema, record)), doubles
+    )
+    return _confluent_header(row["schema_id"]) + body
+
+
+@settings(
+    max_examples=40,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(_payload_rows())
+def test_payload_kernel_matches_row_path_and_java(spark, rows):
+    """Every registry payload schema id (evolution versions included):
+    the batch kernel's frames equal the compile_encoder row path's and
+    Apache Avro Java's, byte for byte, over nulls, int32/int64 extremes,
+    -0.0, NaN, infinities and subnormals."""
+    from mysql_streamer_spark.connectors.avro_wire import registry_payload_schemas
+
+    schemas = registry_payload_schemas()
+    got = _payload_kernel_bytes(rows)
+    for row, frame in zip(_payload_batch(rows).to_pylist(), got, strict=True):
+        assert frame == _payload_row_path(schemas, row), row
+        assert frame == _java_payload_frame(spark, schemas, row), row
+
+
+def test_payload_kernel_covers_every_registry_schema():
+    """The plans cover ids 1-14, and one batch over all of them equals the
+    row path (four plan groups in one batch)."""
+    from mysql_streamer_spark.connectors.avro_wire import (
+        _payload_plans,
+        registry_payload_schemas,
+    )
+
+    schemas = registry_payload_schemas()
+    assert sorted(schemas) == list(range(1, 15))
+    plans, lut = _payload_plans()
+    assert len(plans) > 1 and (lut[1:] >= 0).all()
+    rows = [(sid, sid, -sid, None if sid % 3 else sid, sid / 7) for sid in schemas]
+    want = [_payload_row_path(schemas, r) for r in _payload_batch(rows).to_pylist()]
+    assert _payload_kernel_bytes(rows) == want
+
+
+def test_payload_mixed_batch_keeps_row_order_and_key(spark):
+    """payload_to_confluent over one partition whose batch mixes every
+    schema id, shuffled: each output row is its input row's frame, in input
+    order, keyed by that row's txn_order."""
+    import random
+
+    from mysql_streamer_spark.connectors.avro_wire import (
+        payload_to_confluent,
+        registry_payload_schemas,
+    )
+    from mysql_streamer_spark.tables import local_frame
+
+    schemas = registry_payload_schemas()
+    ids = sorted(schemas) * 5
+    random.Random(7).shuffle(ids)
+    rows = [
+        (
+            sid,
+            1000 - i,
+            i * 7919 - 2**40,
+            None if i % 4 == 0 else i - 30,
+            i / 3 if i % 5 else None,
+        )
+        for i, sid in enumerate(ids)
+    ]
+    frame = local_frame(spark, rows, _payload_schema()).coalesce(1)
+    wire = payload_to_confluent(frame).collect()
+    assert [r.txn_order for r in wire] == [r[1] for r in rows]
+    want = [_payload_row_path(schemas, r) for r in _payload_batch(rows).to_pylist()]
+    assert [bytes(r.value) for r in wire] == want
+
+
+def test_payload_null_pk_raises():
+    """pk is the one non-null payload field: a null there raises, as the
+    row path does, instead of publishing a frame."""
+    from mysql_streamer_spark.connectors.avro_wire import registry_payload_schemas
+
+    rows = [(1, 1, 5, 1, 1.0), (11, 2, None, 1, 1.0)]
+    with pytest.raises(ValueError, match="null in non-null field 'pk'"):
+        _payload_kernel_bytes(rows)
+    row = _payload_batch(rows).to_pylist()[1]
+    with pytest.raises(TypeError):
+        _payload_row_path(registry_payload_schemas(), row)
+
+
+def test_payload_kernel_empty_batch_and_unregistered_id():
+    assert _payload_kernel_bytes([]) == []
+    with pytest.raises(ValueError, match=r"schema ids \[0, 99\] are not registered"):
+        _payload_kernel_bytes([(99, 1, 1, 1, 1.0), (1, 2, 1, 1, 1.0), (0, 3, 1, 1, 1.0)])

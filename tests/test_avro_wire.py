@@ -699,3 +699,57 @@ def test_payload_schema_roundtrip_property(pk, k, val):
     got, end = compile_decoder(schema)(bytes(out), 0)
     assert end == len(out)
     assert got == rec
+
+
+@pytest.mark.parametrize(
+    "ftype, column",
+    [
+        ("string", "pk"),  # a mapped field of no plan kind
+        ("float", "payload_val"),
+        (["null", "int", "string"], "payload_k"),  # a multi-branch union
+        ("long", None),  # non-null, no envelope column to fill it
+    ],
+)
+def test_field_plan_rejects_unplanned_shapes_when_built(ftype, column):
+    from mysql_streamer_spark.connectors.avro_wire import _field_plan
+
+    schema = {"type": "record", "name": "t", "fields": [{"name": "f", "type": ftype}]}
+    with pytest.raises(ValueError, match="outside the batch plan kinds"):
+        _field_plan(schema, {"f": column} if column else {})
+
+
+def test_field_plan_branch_order_follows_the_union():
+    """A typed default puts the value branch first (``[T, "null"]``): the
+    plan writes the union indices as declared, matching the row path."""
+    from mysql_streamer_spark.connectors.avro_wire import _field_plan
+
+    schema = {
+        "type": "record",
+        "name": "t",
+        "fields": [
+            {"name": "pk", "type": ["long", "null"], "default": 3},
+            {"name": "extra", "type": ["string", "null"]},
+        ],
+    }
+    assert _field_plan(schema, {"pk": "pk"}) == (
+        ("pk", "long", "pk", 1, 0),
+        ("extra", "null", None, 1, None),
+    )
+
+
+def test_payload_encode_plans_are_built_once(spark, sf_dir, monkeypatch):
+    """payload_to_confluent reuses the process's plans: a second call (a
+    second micro-batch) reads no registry schema and builds no plan."""
+    from mysql_streamer_spark.cdc.pipeline import envelope_pipeline
+    from mysql_streamer_spark.connectors import avro_wire
+
+    env = envelope_pipeline(spark, sf_dir)
+    avro_wire.payload_to_confluent(env)
+
+    def forbidden(*_args):
+        raise AssertionError("plans rebuilt")
+
+    monkeypatch.setattr(avro_wire, "registry_payload_schemas", forbidden)
+    monkeypatch.setattr(avro_wire, "_field_plan", forbidden)
+    monkeypatch.setattr(avro_wire, "compile_encoder", forbidden)
+    assert avro_wire.payload_to_confluent(env).limit(50).count() == 50

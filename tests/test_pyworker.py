@@ -1,9 +1,13 @@
-"""The package's Python worker daemon: stat-checked zip importer invalidation."""
+"""The package's Python worker daemon: stat-checked zip importer invalidation
+and the modules it loads before forking."""
 
 from __future__ import annotations
 
 import importlib
 import importlib.util
+import json
+import os
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -112,3 +116,31 @@ def test_daemon_stamps_its_importers_before_forking(tmp_path, directory_reads, m
     directory_reads.clear()
     importlib.invalidate_caches()  # a forked worker's first task
     assert directory_reads.count(archive) == 0
+
+
+def test_daemon_loads_the_arrow_task_modules_before_forking():
+    """The daemon's ``__main__`` imports ``PRELOADED`` before it starts
+    forking workers (``daemon.manager()``), so no worker compiles them from
+    ``pyspark.zip`` on its first Arrow task. Run in a fresh interpreter:
+    this one has them all loaded already."""
+    probe = (
+        "import json, runpy, sys\n"
+        "from pyspark import daemon\n"
+        "wanted = json.loads(sys.argv[1])\n"
+        "before = [m for m in wanted if m in sys.modules]\n"
+        "def manager():\n"
+        "    print(json.dumps([before, [m for m in wanted if m in sys.modules]]))\n"
+        "daemon.manager = manager\n"
+        f"runpy.run_module({DAEMON!r}, run_name='__main__')\n"
+    )
+    done = subprocess.run(
+        [sys.executable, "-c", probe, json.dumps(pyworker.PRELOADED)],
+        capture_output=True,
+        text=True,
+        timeout=120,
+        env={**os.environ, "PYTHONPATH": session._PACKAGE_ROOT},
+    )
+    assert done.returncode == 0, done.stderr
+    before, at_fork = json.loads(done.stdout.splitlines()[-1])
+    assert set(before) < set(pyworker.PRELOADED)  # importing pyspark alone does not
+    assert at_fork == list(pyworker.PRELOADED)
